@@ -13,12 +13,12 @@ Scale design — the part that matters at 100 TB:
   aggregate over a SINGLE scan. Ten row checks on a 100 TB table cost
   one pass, not ten — the Deequ "analyzer batching" idea expressed as a
   plain multi-column agg that whole-stage codegen fuses.
-- ``unique`` needs a shuffle on its key (count(*) − count(distinct key)
-  via one partial-aggregated groupBy); ``ref_integrity`` needs a join
-  (left anti against the dimension's distinct keys — broadcast when the
-  dimension is bounded). These run as separate jobs because they are
-  genuinely not map-side computable; each is still one shuffle.
-- Results are tiny (one row per check), so the union of check results
+- ``unique`` is one more column of that aggregate, count(*) −
+  count(distinct key); ``ref_integrity`` needs a join (left anti against
+  the dimension's distinct keys — broadcast when the dimension is
+  bounded), one more scan per referential check, its orphan counts
+  joined onto the aggregate.
+- Results are tiny (one row per check and group), so collecting them
   is driver-cheap regardless of input size.
 
 ``run_checks`` returns a DataFrame (check, n_violations) — queryable,
@@ -118,70 +118,63 @@ Check = RowCheck | UniqueCheck | RefCheck
 def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
     """Evaluate all checks; return (check string, n_violations long).
 
-    Row-level checks share one scan+aggregate; unique/referential checks
-    each contribute one additional single-shuffle job. Output row order
-    is the check declaration order (stable for consumers that diff runs).
+    ``run_checks_by`` with no grouping columns (a global aggregate: one
+    row even on empty input). Output row order is the check declaration
+    order (stable for consumers that diff runs).
     """
-    spark = df.sparkSession
-    results: list[DataFrame] = []
-
-    row_checks = [c for c in checks if isinstance(c, RowCheck)]
-    if row_checks:
-        # coalesce(_, 0): sum over zero rows is NULL — an empty input has
-        # zero violations, and persisted metric rows must say so as 0.
-        aggs = [
-            F.coalesce(
-                F.sum(F.when(~c.predicate, F.lit(1)).otherwise(F.lit(0))),
-                F.lit(0),
-            ).cast("long").alias(f"v{i}")
-            for i, c in enumerate(row_checks)
-        ]
-        one = df.agg(*aggs)  # ONE pass for every row-level check
-        # unpivot the 1×N agg row into N (check, n_violations) rows
-        results.append(
-            one.select(
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            F.lit(c.name).alias("check"),
-                            F.col(f"v{i}").alias("n_violations"),
-                        )
-                        for i, c in enumerate(row_checks)
-                    ])
-                ).alias("r")
-            ).select("r.check", "r.n_violations")
-        )
-
-    for c in checks:
-        if isinstance(c, UniqueCheck):
-            results.append(
-                df.agg(
-                    (F.count(F.lit(1)) - F.count_distinct(*[F.col(x) for x in c.cols]))
-                    .cast("long").alias("n_violations")
-                ).select(F.lit(c.name).alias("check"), "n_violations")
-            )
-        elif isinstance(c, RefCheck):
-            dim_keys = c.dim.select(
-                *[F.col(p).alias(f) for f, p in zip(c.fk_cols, c.pk_cols)]
-            ).distinct()
-            if c.broadcast_dim:
-                dim_keys = F.broadcast(dim_keys)
-            fact = df.where(
-                reduce(lambda a, x: a & F.col(x).isNotNull(), c.fk_cols, F.lit(True))
-            )
-            orphans = fact.join(dim_keys, list(c.fk_cols), "left_anti")
-            results.append(
-                orphans.agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-                .select(F.lit(c.name).alias("check"), "n_violations")
-            )
-
-    if not results:
-        return spark.createDataFrame([], "check string, n_violations long")
-    out = reduce(lambda a, b: a.unionByName(b), results)
-    # Re-impose declaration order (the union interleaves job outputs).
     order = {c.name: i for i, c in enumerate(checks)}
     mapping = F.create_map(*[x for k, i in order.items() for x in (F.lit(k), F.lit(i))])
-    return out.orderBy(mapping[F.col("check")])
+    out = run_checks_by(df, checks, [])
+    return out.orderBy(mapping[F.col("check")]) if checks else out
+
+
+def run_checks_by(df: DataFrame, checks: list[Check], by: list[str]) -> DataFrame:
+    """Per-group checks: (by..., check, n_violations) for every group
+    with rows and every check; groups come back unordered, checks in
+    declaration order within a group.
+
+    Row-level and unique checks share ONE grouped aggregate over one
+    scan; each referential check adds one left-anti join (broadcast
+    dimension keys) whose per-group orphan counts join onto it.
+    """
+    if not checks:
+        return df.select(*by, F.lit(None).cast("string").alias("check"),
+                         F.lit(None).cast("long").alias("n_violations")).where(F.lit(False))
+    # coalesce(_, 0): sum over zero rows is NULL — an empty input has
+    # zero violations, and persisted metric rows must say so as 0.
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    refs = []
+    for i, c in enumerate(checks):
+        if isinstance(c, RowCheck):
+            v = F.sum(F.when(~c.predicate, F.lit(1)).otherwise(F.lit(0)))
+            aggs.append(F.coalesce(v, F.lit(0)).cast("long").alias(f"v{i}"))
+        elif isinstance(c, UniqueCheck):
+            v = F.count(F.lit(1)) - F.count_distinct(*[F.col(x) for x in c.cols])
+            aggs.append(v.cast("long").alias(f"v{i}"))
+        else:
+            refs.append((i, c))
+    out = df.groupBy(*by).agg(*aggs)
+    for i, c in refs:
+        dim_keys = c.dim.select(
+            *[F.col(p).alias(f) for f, p in zip(c.fk_cols, c.pk_cols)]
+        ).distinct()
+        if c.broadcast_dim:
+            dim_keys = F.broadcast(dim_keys)
+        fact = df.where(
+            reduce(lambda a, x: a & F.col(x).isNotNull(), c.fk_cols, F.lit(True))
+        )
+        orphans = (fact.join(dim_keys, list(c.fk_cols), "left_anti")
+                   .groupBy(*[F.col(b).alias(f"__by_{b}") for b in by])
+                   .agg(F.count(F.lit(1)).cast("long").alias(f"v{i}")))
+        on = reduce(lambda a, b: a & F.col(b).eqNullSafe(F.col(f"__by_{b}")), by, F.lit(True))
+        out = (out.join(orphans, on, "left").drop(*[f"__by_{b}" for b in by])
+               .withColumn(f"v{i}", F.coalesce(F.col(f"v{i}"), F.lit(0).cast("long"))))
+    per_check = F.array(*[
+        F.struct(F.lit(c.name).alias("check"), F.col(f"v{i}").alias("n_violations"))
+        for i, c in enumerate(checks)
+    ])
+    return (out.select(*by, F.explode(per_check).alias("r"))
+            .select(*by, "r.check", "r.n_violations"))
 
 
 class DataQualityError(RuntimeError):

@@ -17,9 +17,9 @@ raw → curated before ``WarehouseLoader`` publishes its pointers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from gads_etl_spark.pipeline.keys import PartitionKey
+from gads_etl_spark.pipeline.keys import LAYOUT, PartitionKey
 from gads_etl_spark.pipeline.raw_sink import RawZone
 
 
@@ -32,54 +32,51 @@ class CuratedZone(RawZone):
         super().__init__(spark, root, data_format="parquet")
 
 
-def stage_partition(
-    curated: CuratedZone,
-    df: DataFrame,
-    key: PartitionKey,
-    run_id: str,
-    schema_version: str = "v1",
-    checks: list | None = None,
-) -> dict:
-    """Stage one curated partition (write + metadata-last seal).
-
-    ``checks`` (operators/dq.py constraints) gate the PAYLOAD the way
-    count validation gates the ledger: they run before any byte is
-    written, so a constraint violation stages nothing — no unsealed
-    debris, no pointer ever observes the bad partition. The check cost
-    is one extra pass over the partition (row checks batch into one
-    aggregate), paid only where a gate was requested.
-    """
-    if checks:
-        from gads_etl_spark.operators import dq
-
-        dq.assert_checks(df, checks)
-    return curated.write_partition(df, key, run_id, schema_version=schema_version)
-
-
 def materialize_plan(raw: RawZone, curated: CuratedZone, plan,
                      checks: list | None = None) -> int:
-    """Copy every load/replace target raw → curated (idempotent: already-
-    staged (key, run_id) partitions are skipped — reruns converge).
+    """Copy every load/replace target raw → curated; returns the number
+    of partitions staged. Already-staged (key, run_id) partitions are
+    skipped, so reruns converge. One query at a time (payload schemas
+    differ), all its targets together: one read, one ``partitionBy``
+    parquet write, one count, one ``seal_many``.
 
-    Returns the number of partitions staged. Each copy is one columnar
-    rewrite of one partition directory; targets are independent, so on a
-    cluster these parallelize across the scheduler queue. ``checks``
-    apply per partition (see ``stage_partition``); the first violating
-    partition aborts the materialization with nothing staged for it,
-    while partitions already staged remain (idempotent rerun semantics —
-    fix the data, rerun, only the missing targets restage).
+    ``checks`` (operators/dq.py constraints) gate the PAYLOAD the way
+    count validation gates the ledger: evaluated per logical partition in
+    one aggregate before anything is written. A violating partition
+    stages nothing (no debris, no pointer ever observes it), the clean
+    ones stage, then ``DataQualityError`` names every violation.
+
+    Every target must be a sealed raw partition: one that is missing or
+    unsealed (unsealed ⇒ invisible) raises ``FileNotFoundError`` before
+    anything is staged, so it is never published as an empty partition.
     """
-    targets = plan.load.unionByName(plan.replace).collect()
-    staged = 0
-    for t in targets:
-        key = PartitionKey(t["source"], t["customer_id"], t["query_name"],
-                          t["logical_date"])
-        run_id = t["current_run_id"]
-        if curated.is_sealed(key, run_id):
-            continue
-        df = raw.read_partition(key, run_id)
-        stage_partition(curated, df, key, run_id,
-                        schema_version=t["schema_version"] or "v1",
-                        checks=checks)
-        staged += 1
+    by_query: dict[str, dict] = {}
+    for t in plan.load.unionByName(plan.replace).collect():
+        key, run_id = PartitionKey.of(t), t["current_run_id"]
+        if not curated.is_sealed(key, run_id):
+            if not raw.is_sealed(key, run_id):
+                raise FileNotFoundError(
+                    f"raw partition {key} run_id={run_id} is not sealed; nothing to stage")
+            by_query.setdefault(key.query_name, {})[key, run_id] = t["schema_version"] or "v1"
+    staged, violations = 0, []
+    for group in by_query.values():
+        df = raw.read_partitions(group)
+        if checks:
+            from gads_etl_spark.operators import dq
+
+            bad = (dq.run_checks_by(df, checks, list(LAYOUT))
+                   .where(F.col("n_violations") > 0).collect())
+            violations += [f"{PartitionKey.of(r)} run_id={r['run_id']}: {r['check']}: "
+                           f"{r['n_violations']} violations" for r in bad]
+            for r in bad:
+                group.pop((PartitionKey.of(r), r["run_id"]), None)
+            if bad:
+                df = raw.read_partitions(group)
+        if group:
+            staged += len(curated.write_partitions(df, [
+                {**key.as_dict(), "run_id": run_id, "schema_version": version}
+                for (key, run_id), version in group.items()
+            ]))
+    if violations:
+        raise dq.DataQualityError("; ".join(violations))
     return staged

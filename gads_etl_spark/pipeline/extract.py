@@ -6,18 +6,23 @@ Contract parity (reference src/gads_etl/pipeline.py):
   (``campaign.id``); each flattens to snake_case (``campaign_id``). A
   missing path fails the job (AnalysisException ↔ the reference's
   AttributeError crash, spec.md:42 — schema drift is fail-fast).
-- S2 pushdown (pipeline.py:92-97): the only filter is
-  ``date_column BETWEEN start AND end`` plus the projection — both reach
-  the source scan via Catalyst (PushedFilters / ReadSchema), exactly what
-  the reference pushes into GAQL.
+- S2 pushdown (pipeline.py:92-97): the filters are
+  ``date_column BETWEEN window_start AND window_end`` and
+  ``customer IN (planned customers)`` plus the projection — all reach the
+  source scan via Catalyst (PushedFilters / ReadSchema), exactly what the
+  reference pushes into GAQL.
 - P2 provenance (pipeline.py:106): ``__query_name`` literal on every row.
-- The write goes through RawZone (payload, then metadata-last seal).
+
+The reference (pipeline.py:38-78) writes one partition per API call; here
+one call extracts every planned customer of a (query, window) in ONE pass:
+one ``partitionBy`` write over the five layout columns, row counts from
+one re-read of the written directories, one ``seal_many``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import date, datetime, timezone
+from datetime import date
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,116 +43,55 @@ class QueryDefinition:
     def flat_name(self, field: str) -> str:
         return field.replace(".", "_")
 
-
-def flatten_projection(df: DataFrame, qdef: QueryDefinition,
-                       start: date, end: date) -> DataFrame:
-    """P1+S2: select the configured dot-paths as snake_case columns,
-    filtered to the date window. Declarative → Catalyst prunes nested
-    fields and pushes the date predicate into the scan."""
-    cols = [F.col(f).alias(qdef.flat_name(f)) for f in qdef.fields]
-    return (
-        df.where(F.col(qdef.date_column).between(F.lit(start), F.lit(end)))
-        .select(*cols)
-        .withColumn("__query_name", F.lit(qdef.name))
-    )
+    @property
+    def customer_path(self) -> str:
+        """The source path raw partitions are keyed by: the configured
+        field that flattens to ``customer_id`` (GAQL's ``customer.id``),
+        else the source's own ``customer_id`` column."""
+        for f in self.fields:
+            if self.flat_name(f) == "customer_id":
+                return f
+        return "customer_id"
 
 
 def extract_partition(
     source: DataFrame,
     raw: RawZone,
     qdef: QueryDefinition,
-    key: PartitionKey,
+    keys: list[PartitionKey],
     run_id: str,
-    schema_version: str = "v1",
-) -> dict:
-    """One extraction attempt for one logical partition (reference
-    pipeline.py:38-78): flatten + filter to the partition's logical_date,
-    write payload, seal metadata-last. Returns the manifest row."""
-    day = flatten_projection(source, qdef, key.logical_date, key.logical_date)
-    return raw.write_partition(
-        day, key, run_id,
-        schema_version=schema_version,
-        query_signature=f"SELECT {', '.join(qdef.fields)} FROM {qdef.entity}",
-    )
-
-
-def extract_day_bulk(
-    source: DataFrame,
-    raw: RawZone,
-    qdef: QueryDefinition,
-    customer_col: str,
-    logical_date: date,
-    run_id: str,
-    source_name: str = "google_ads",
+    window_start: date,
+    window_end: date,
     schema_version: str = "v1",
 ) -> list[dict]:
-    """Extract EVERY customer's partition for one day in ONE Spark job.
+    """Extract the partitions ``keys`` (one query, one logical date, any
+    number of customers) from the ``[window_start, window_end]`` window in
+    one pass; returns their manifest rows. A planned customer without
+    rows in the window gets a sealed empty partition.
 
-    The reference (and ``extract_partition``) writes one partition per
-    call — one job per (query, customer); at 10k customers that is 10k
-    driver round-trips. Here the flattened day is written once with
-    ``partitionBy`` over the five layout columns (identical hive
-    directory layout, one job, tasks fan out per customer), record
-    counts come from ONE re-read of the committed files (write-then-count
-    discipline), and the seals land via one ``seal_many`` batch.
-
-    Returns the manifest rows, one per customer present in the source.
+    The customer column becomes the ``customer_id`` partition column
+    (its string form), so every partition holds only its customer's rows.
     """
-    from pyspark.sql import functions as F
-
-    from gads_etl_spark.pipeline.raw_sink import SealedPartitionError
-
-    # Refuse BEFORE writing (overwrite refusal, S6): one manifest lookup
-    # for the whole (query, date, run) batch.
-    already = (
-        raw.manifest()
-        .where((F.col("run_id") == run_id) & (F.col("query_name") == qdef.name)
-               & (F.col("logical_date") == F.lit(logical_date)))
-        .limit(1).count()
+    ((source_name, query_name, logical_date),) = {
+        (k.source, k.query_name, k.logical_date) for k in keys}
+    customer = F.col(qdef.customer_path).cast("string")
+    layout = {
+        "source": F.lit(source_name), "customer_id": customer,
+        "query_name": F.lit(query_name), "logical_date": F.lit(logical_date.isoformat()),
+        "run_id": F.lit(run_id),
+    }
+    payload = [F.col(f).alias(qdef.flat_name(f)) for f in qdef.fields
+               if qdef.flat_name(f) != "customer_id"]
+    rows = (
+        source
+        .where(F.col(qdef.date_column).between(F.lit(window_start), F.lit(window_end))
+               & customer.isin(sorted({k.customer_id for k in keys})))
+        .select(*payload, F.lit(qdef.name).alias("__query_name"),
+                *[c.alias(n) for n, c in layout.items()])
     )
-    if already:
-        raise SealedPartitionError(
-            f"bulk extraction for {qdef.name}/{logical_date} run_id={run_id} "
-            "is already sealed; raw partitions are immutable"
-        )
-
-    flat = flatten_projection(source, qdef, logical_date, logical_date)
-    partitioned = flat.select(
-        "*",
-        F.lit(source_name).alias("source"),
-        F.col(customer_col).cast("string").alias("customer_id"),
-        F.lit(qdef.name).alias("query_name"),
-        F.lit(logical_date.isoformat()).alias("logical_date"),
-        F.lit(run_id).alias("run_id"),
-    )
-    writer = partitioned.write.mode("append").partitionBy(
-        "source", "customer_id", "query_name", "logical_date", "run_id"
-    )
-    if raw.data_format == "json":
-        writer.json(raw.root)
-    else:
-        writer.parquet(raw.root)
-
-    counts = (
-        raw.read_all()
-        .where((F.col("run_id") == run_id) & (F.col("query_name") == qdef.name)
-               & (F.col("logical_date") == F.lit(logical_date)))
-        .groupBy("customer_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    extracted_at = datetime.now(timezone.utc).replace(tzinfo=None)
-    metas = [
-        {
-            "source": source_name, "customer_id": r["customer_id"],
-            "query_name": qdef.name, "logical_date": logical_date,
-            "run_id": run_id, "extracted_at": extracted_at,
-            "schema_version": schema_version, "record_count": r["n"],
-            "api_version": None,
-            "query_signature": f"SELECT {', '.join(qdef.fields)} FROM {qdef.entity}",
-        }
-        for r in sorted(counts, key=lambda r: r["customer_id"])
-    ]
-    if metas:
-        raw.seal_many(metas)
-    return metas
+    signature = f"SELECT {', '.join(qdef.fields)} FROM {qdef.entity}"
+    return raw.write_partitions(rows, [
+        {**k.as_dict(), "run_id": run_id, "schema_version": schema_version,
+         "query_signature": signature}
+        for k in keys
+    ])

@@ -12,6 +12,17 @@ from dataclasses import dataclass
 from datetime import date, datetime, timezone
 
 LOGICAL_KEY = ("source", "customer_id", "query_name", "logical_date")
+#: The hive directory levels of a raw/curated partition, outermost first.
+LAYOUT = (*LOGICAL_KEY, "run_id")
+
+#: What Spark's ``ExternalCatalogUtils.escapePathName`` escapes.
+_ESCAPED = frozenset([chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
+def escape_path_name(value: str) -> str:
+    """Escape a partition value as Spark's ``partitionBy`` writer does (a
+    run_id's ``:`` becomes ``%3A``); discovery reads the value back."""
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in value)
 
 
 @dataclass(frozen=True)
@@ -20,6 +31,12 @@ class PartitionKey:
     customer_id: str
     query_name: str
     logical_date: date
+
+    @classmethod
+    def of(cls, row) -> "PartitionKey":
+        """The key of any row or dict carrying the four key columns."""
+        return cls(row["source"], row["customer_id"], row["query_name"],
+                   row["logical_date"])
 
     def as_dict(self) -> dict:
         return {
@@ -30,11 +47,11 @@ class PartitionKey:
         }
 
     def relative_path(self) -> str:
-        """Hive-style directory path (reference docs/raw_sink_contract.md:15-27)."""
-        return (
-            f"source={self.source}/customer_id={self.customer_id}/"
-            f"query_name={self.query_name}/logical_date={self.logical_date.isoformat()}"
-        )
+        """Hive-style directory path (reference docs/raw_sink_contract.md:15-27),
+        values escaped like Spark's own partitioned writes."""
+        values = (self.source, self.customer_id, self.query_name,
+                  self.logical_date.isoformat())
+        return "/".join(f"{k}={escape_path_name(v)}" for k, v in zip(LOGICAL_KEY, values))
 
 
 def new_run_id(now: datetime | None = None) -> str:

@@ -26,7 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY
@@ -39,19 +39,17 @@ class ReconciliationPlan:
     """Immutable reconciliation outcome (reference loader.py:23-29).
 
     ``load``/``replace`` carry the logical key + target run_id/schema_version;
-    ``demote`` carries the stale pointer rows.
+    ``demote`` carries the stale pointer rows. ``sizes`` are their row
+    counts, observed while the plan was materialized.
     """
 
     load: DataFrame
     replace: DataFrame
     demote: DataFrame
+    sizes: dict[str, int]
 
     def counts(self) -> dict[str, int]:
-        return {
-            "load": self.load.count(),
-            "replace": self.replace.count(),
-            "demote": self.demote.count(),
-        }
+        return dict(self.sizes)
 
 
 def classify_targets(success_states: DataFrame, pointers: DataFrame) -> DataFrame:
@@ -91,15 +89,36 @@ class WarehouseLoader:
         self._pointers = pointers
 
     def reconcile(self) -> ReconciliationPlan:
-        """Build the plan without mutating anything (dry-run friendly)."""
+        """Build the plan without mutating anything (dry-run friendly).
+
+        The non-noop delta and the demote set are each materialized ONCE
+        (``localCheckpoint``), with their sizes observed on that same
+        pass: staging, publishing and ``counts()`` then read a fixed
+        snapshot instead of re-running the joins, and the plan stays
+        what it was when reconciled even after pointers move.
+        """
         success = self._states.read().where(F.col("status") == "success")
         ptrs = self._pointers.read()
-        classified = classify_targets(success, ptrs)
         target_cols = [*LOGICAL_KEY, "current_run_id", "schema_version"]
+        delta_obs, demote_obs = Observation(), Observation()
+        delta = (
+            classify_targets(success, ptrs)
+            .observe(delta_obs,
+                     *[F.count_if(F.col("action") == a).alias(a) for a in ("load", "replace")])
+            .where(F.col("action") != "noop")
+            .select(*target_cols, "action")
+            .localCheckpoint()
+        )
+        demote = (
+            demotion_targets(success, ptrs)
+            .observe(demote_obs, F.count(F.lit(1)).alias("demote"))
+            .localCheckpoint()
+        )
         return ReconciliationPlan(
-            load=classified.where(F.col("action") == "load").select(*target_cols),
-            replace=classified.where(F.col("action") == "replace").select(*target_cols),
-            demote=demotion_targets(success, ptrs),
+            load=delta.where(F.col("action") == "load").select(*target_cols),
+            replace=delta.where(F.col("action") == "replace").select(*target_cols),
+            demote=demote,
+            sizes={**delta_obs.get, **demote_obs.get},
         )
 
     def run(self, plan: ReconciliationPlan | None = None) -> ReconciliationPlan:
@@ -125,13 +144,13 @@ class WarehouseLoader:
         # Skip the commit entirely when there is nothing to publish: a
         # pointer-table rewrite is cheap but not free, and no-op loads are
         # the common case in steady state.
-        if updates.limit(1).count() == 0:
+        if not plan.sizes["load"] + plan.sizes["replace"]:
             return
         self._pointers.upsert(
             updates.select([f.name for f in POINTER_SCHEMA.fields])
         )
 
     def _demote(self, plan: ReconciliationPlan) -> None:
-        if plan.demote.limit(1).count() == 0:
+        if not plan.sizes["demote"]:
             return
         self._pointers.delete(plan.demote.select(*LOGICAL_KEY))

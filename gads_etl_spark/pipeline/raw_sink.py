@@ -23,9 +23,11 @@ The seal is two artifacts written in order:
    index used by validators/loaders. ``seal_many`` appends one file per
    *batch*, not per partition, so manifest file count tracks job count.
 
-Scale notes: payload is written by executors with Spark's committer (task
-temp → rename), so partial attempts are never visible even before the seal.
-Works on any Hadoop filesystem (file://, s3a://, ...).
+Scale notes: a batch of partitions is ONE ``partitionBy`` job, with
+Spark's own escaped directory names (a run_id's ``:`` is ``%3A``); the
+committer (task temp → rename) keeps partial attempts invisible even
+before the seal. Reads open only the directories asked for. Works on any
+Hadoop filesystem (file://, s3a://, ...).
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from gads_etl_spark.pipeline import fsutil
-from gads_etl_spark.pipeline.keys import LOGICAL_KEY, PartitionKey
+from gads_etl_spark.pipeline.keys import LAYOUT, PartitionKey, escape_path_name
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("source", T.StringType(), False),
@@ -56,6 +58,9 @@ MANIFEST_SCHEMA = T.StructType([
 ])
 
 SEAL_MARKER = "_SEALED.json"
+
+#: The layout columns as every read returns them.
+LAYOUT_SCHEMA = T.StructType([MANIFEST_SCHEMA[c] for c in LAYOUT])
 
 
 class SealedPartitionError(RuntimeError):
@@ -132,7 +137,8 @@ class RawZone:
     # -- write path -------------------------------------------------------
 
     def partition_path(self, key: PartitionKey, run_id: str) -> str:
-        return f"{self.root}/{key.relative_path()}/run_id={run_id}"
+        """The directory Spark's ``partitionBy`` writes for (key, run_id)."""
+        return f"{self.root}/{key.relative_path()}/run_id={escape_path_name(run_id)}"
 
     def write_partition(
         self,
@@ -144,54 +150,67 @@ class RawZone:
         query_signature: str | None = None,
         count_mode: str = "reread",
     ) -> dict:
-        """Write payload, then seal (metadata-last). Returns the manifest row.
+        """``write_partitions`` for one partition; returns its manifest row.
 
-        ``count_mode='reread'`` (default) counts the committed files —
-        the strongest guarantee: a nondeterministic input can never seal
-        a count that disagrees with the payload the validator will later
-        re-count (A9), and a partially-visible write is caught too.
-        ``count_mode='observe'`` attaches an ``Observation`` to the write
-        pass itself (pipeline/metrics.py): same safety against
-        nondeterminism (the count describes the exact rows written),
-        no second scan — the right mode when the payload is TB-scale and
-        the filesystem commit protocol is trusted.
+        ``count_mode='observe'`` counts with an ``Observation`` on the
+        write pass itself (pipeline/metrics.py) instead of re-reading:
+        same safety against nondeterminism (the count describes the exact
+        rows written), no second scan — the right mode when the payload
+        is TB-scale and the filesystem commit protocol is trusted.
+        """
+        meta = {**key.as_dict(), "run_id": run_id, "schema_version": schema_version,
+                "api_version": api_version, "query_signature": query_signature}
+        layout = df.withColumns({c: F.lit(str(v)) for c, v in meta.items() if c in LAYOUT})
+        return self.write_partitions(layout, [meta], count_mode=count_mode)[0]
+
+    def write_partitions(self, df: DataFrame, metas: list[dict],
+                         count_mode: str = "reread") -> list[dict]:
+        """Write the partitions ``metas`` names (layout values +
+        ``schema_version``) in ONE ``partitionBy`` pass of ``df`` (payload
+        + the five layout columns, every row in a named partition), then
+        seal them in one ``seal_many``; a named partition without rows
+        seals with ``record_count`` 0. Returns the manifest rows.
+
+        Refuses before writing when a target is sealed or holds an
+        unsealed attempt. Counts come from one grouped re-read of just the
+        written directories: a nondeterministic input can never seal a
+        count that disagrees with the payload the validator re-counts
+        (A9), and a partially-visible write is caught too. One writer per
+        zone at a time: appends commit through the root's ``_temporary``.
         """
         if count_mode not in ("reread", "observe"):
             raise ValueError(f"count_mode must be 'reread' or 'observe', got {count_mode!r}")
-        if self.is_sealed(key, run_id):
-            raise SealedPartitionError(
-                f"partition {key} run_id={run_id} is sealed; raw partitions are immutable"
-            )
-        path = self.partition_path(key, run_id)
-        if count_mode == "observe":
-            from gads_etl_spark.pipeline.metrics import observed
+        if count_mode == "observe" and len(metas) != 1:
+            raise ValueError("count_mode='observe' counts a single partition")
+        targets = [(PartitionKey.of(m), m["run_id"]) for m in metas]
+        for key, run_id in targets:
+            if self.is_sealed(key, run_id):
+                raise SealedPartitionError(
+                    f"partition {key} run_id={run_id} is sealed; raw partitions are immutable")
+            if self._path_exists(self.partition_path(key, run_id)):
+                raise FileExistsError(f"partition {key} run_id={run_id} holds an unsealed attempt")
+        obs = None
+        # Layout columns only: no payload to write, every target is empty.
+        if any(c not in LAYOUT for c in df.columns):
+            if count_mode == "observe":
+                from gads_etl_spark.pipeline.metrics import observed
 
-            df, obs = observed(df, f"raw_write:{run_id}")
-        writer = df.write.mode("errorifexists")
-        if self.data_format == "json":
-            writer.json(path)
-        elif self.data_format == "orc":
-            writer.orc(path)
-        else:
-            writer.parquet(path)
+                df, obs = observed(df, f"raw_write:{metas[0]['run_id']}")
+            df.write.mode("append").partitionBy(*LAYOUT).format(self.data_format).save(self.root)
         if count_mode == "observe":
-            record_count = int(obs.get["n_rows"])
+            counts = {targets[0]: int(obs.get["n_rows"])} if obs else {}
         else:
-            record_count = self._read_payload(path).count()
-        meta = {
-            "source": key.source,
-            "customer_id": key.customer_id,
-            "query_name": key.query_name,
-            "logical_date": key.logical_date,
-            "run_id": run_id,
-            "extracted_at": datetime.now(timezone.utc).replace(tzinfo=None),
-            "schema_version": schema_version,
-            "record_count": record_count,
-            "api_version": api_version,
-            "query_signature": query_signature,
-        }
-        self.seal(meta)
-        return meta
+            # Empty read schema: no inference pass, yet every JSON row is
+            # parsed (FAILFAST), so a malformed line fails the count.
+            rows = (self.read_partitions(targets, schema=T.StructType([]))
+                    .groupBy(*LAYOUT).count().collect())
+            counts = {(PartitionKey.of(r), r["run_id"]): r["count"] for r in rows}
+        extracted_at = datetime.now(timezone.utc).replace(tzinfo=None)
+        sealed = [{"api_version": None, "query_signature": None, **m,
+                   "extracted_at": extracted_at, "record_count": counts.get(t, 0)}
+                  for m, t in zip(metas, targets)]
+        self.seal_many(sealed)
+        return sealed
 
     def seal(self, meta: dict) -> None:
         """Seal one partition (marker first, then manifest row)."""
@@ -201,12 +220,11 @@ class RawZone:
         """Batch seal: one marker per partition + ONE manifest append for
         the whole batch (manifest file count stays proportional to jobs,
         not partitions — the small-files fix)."""
+        if not metas:
+            return
         markers = {}
         for meta in metas:
-            key = PartitionKey(
-                meta["source"], meta["customer_id"], meta["query_name"],
-                meta["logical_date"],
-            )
+            key = PartitionKey.of(meta)
             marker = self._marker_path(key, meta["run_id"])
             if self._path_exists(marker):
                 raise SealedPartitionError(
@@ -248,36 +266,51 @@ class RawZone:
 
     # -- read path --------------------------------------------------------
 
-    def _read_payload(self, path: str, schema: T.StructType | None = None) -> DataFrame:
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        if self.data_format == "json":
-            return reader.option("mode", "FAILFAST").json(path)
-        if self.data_format == "orc":
-            return reader.orc(path)
-        return reader.parquet(path)
-
     def read_partition(self, key: PartitionKey, run_id: str,
                        schema: T.StructType | None = None) -> DataFrame:
+        """One sealed partition: payload plus the five layout columns."""
         if not self.is_sealed(key, run_id):
             raise FileNotFoundError(
                 f"partition {key} run_id={run_id} is not sealed (unsealed ⇒ invisible)"
             )
-        return self._read_payload(self.partition_path(key, run_id), schema)
+        return self.read_partitions([(key, run_id)], schema)
+
+    def read_partitions(self, targets, schema: T.StructType | None = None) -> DataFrame:
+        """Rows of the given ``(key, run_id)`` partitions: payload plus the
+        five layout columns. Only those directories are listed and opened
+        (absent ones contribute nothing), so neither the zone's history
+        nor a bad file outside them affects the read."""
+        paths = [self.partition_path(k, r) for k, r in targets]
+        return self._read([p for p in paths if self._path_exists(p)], schema)
 
     def read_all(self, schema: T.StructType | None = None) -> DataFrame:
-        """Read the whole raw zone with hive partition discovery — the
-        batch-validation scan (payload columns + the 5 partition columns).
-        """
-        reader = self.spark.read.option("basePath", self.root)
-        if schema is not None:
-            reader = reader.schema(schema)
+        """Read the whole zone with hive partition discovery (payload +
+        the five layout columns)."""
+        return self._read([self.root] if self._path_exists(self.root) else [], schema)
+
+    def _read(self, paths: list[str], schema: T.StructType | None) -> DataFrame:
+        """Layout columns come back as written (customer ``0123`` stays
+        ``"0123"``): the read schema is the payload's, given or inferred
+        once, plus ``LAYOUT_SCHEMA``, and Spark types partition columns
+        from a user schema instead of inferring them."""
+        if schema is None and paths:
+            try:
+                schema = self._reader().load(paths).schema
+            except AnalysisException as exc:
+                # Only empty partitions: no file to take a schema from.
+                if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
+                    raise
+        payload = [f for f in (schema.fields if schema else []) if f.name not in LAYOUT]
+        full = T.StructType([*payload, *LAYOUT_SCHEMA.fields])
+        if not paths:
+            return self.spark.createDataFrame([], full)
+        return self._reader().schema(full).load(paths)
+
+    def _reader(self):
+        reader = self.spark.read.format(self.data_format).option("basePath", self.root)
         if self.data_format == "json":
-            return reader.option("mode", "FAILFAST").json(self.root)
-        if self.data_format == "orc":
-            return reader.orc(self.root)
-        return reader.parquet(self.root)
+            reader = reader.option("mode", "FAILFAST")
+        return reader
 
     def list_run_ids(self, key: PartitionKey) -> list[str]:
         """Sorted run_ids of a logical partition, from the manifest (S8)."""
@@ -293,11 +326,3 @@ class RawZone:
             .collect()
         )
         return rows[0]["run_ids"] if rows else []
-
-    def run_id_index(self) -> DataFrame:
-        """Per logical key: sorted run_id set (distributed version of S8)."""
-        return (
-            self.manifest()
-            .groupBy(*LOGICAL_KEY)
-            .agg(F.sort_array(F.collect_set("run_id")).alias("run_ids"))
-        )

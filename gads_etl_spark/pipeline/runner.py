@@ -4,14 +4,18 @@ Orchestrates (reference src/gads_etl/pipeline.py:138-185, cli.py:40-45):
 
 1. one ``run_id`` per execution (fences every write),
 2. the planned (query × customer) extractions for the target date
-   (``plan_daily_runs``) against a source DataFrame per entity,
+   (``plan_daily_runs``), grouped by (query, window): ONE
+   ``extract_partition`` pass per group writes every customer's partition
+   (the reference calls the API once per customer and date),
 3. ONE batch validation job for all extracted partitions (the reference
    validates per-partition; see validator.py scale notes),
-4. warehouse reconcile → stage curated copies → publish pointers.
+4. ONE warehouse reconciliation, whose plan drives staging of the curated
+   copies, the pointer publish and the reported counts.
 
 Per-run failures are contained per partition (partial-failure
-accounting, docs/control_plane.md:39-43): an extraction error marks that
-partition failed in the run report and the rest proceed.
+accounting, docs/control_plane.md:39-43): an extraction error marks the
+partitions of that (query, window) group failed in the run report and
+the rest proceed.
 """
 
 from __future__ import annotations
@@ -60,7 +64,8 @@ def run_daily(
     dq_checks: list | None = None,
     lookback_days: int | None = None,
 ) -> RunReport:
-    """One daily sync: extract → validate (one batch) → load → publish.
+    """One daily sync: extract (one pass per query and window) → validate
+    (one batch) → reconcile once → stage → publish.
 
     ``sources`` maps query entity → source DataFrame (the fixture stand-in
     for the live connector; a real deployment plugs a DataSource here).
@@ -69,36 +74,38 @@ def run_daily(
     ``lookback_days`` overrides the config's daily lookback — the
     reference's catch-up mode is exactly a daily sync with the lookback
     widened to the catch-up window (pipeline.py:179-185), so
-    ``run_daily(..., lookback_days=window)`` IS historical_catch_up.
+    ``run_daily(..., lookback_days=window)`` IS historical_catch_up: each
+    target-date partition holds the rows of ``[target − lookback,
+    target]``.
     """
     report = RunReport(run_id=run_id or new_run_id())
-    runs = plan_daily_runs(config, target_date, lookback_days=lookback_days)
+    groups: dict[tuple, list[PartitionKey]] = {}
+    for r in plan_daily_runs(config, target_date, lookback_days=lookback_days):
+        groups.setdefault((r.query_name, r.window_start, r.window_end), []).append(
+            PartitionKey(config.source, r.customer_id, r.query_name, r.logical_date))
 
-    for r in runs:
-        qdef = config.query(r.query_name)
-        key = PartitionKey(config.source, r.customer_id, r.query_name, r.logical_date)
+    for (query_name, start, end), keys in groups.items():
+        qdef = config.query(query_name)
         try:
-            source = sources[qdef.entity]
-            extract_partition(source, raw, qdef, key, report.run_id)
-            report.extracted.append(key)
-        except Exception as exc:  # partial-failure accounting per partition
-            report.extract_errors[key] = str(exc)
+            extract_partition(sources[qdef.entity], raw, qdef, keys, report.run_id,
+                              start, end)
+            report.extracted.extend(keys)
+        except Exception as exc:  # partial-failure accounting per group
+            report.extract_errors.update(dict.fromkeys(keys, str(exc)))
 
     if report.extracted:
         requests = spark.createDataFrame(
             [{**k.as_dict(), "run_id": report.run_id, "schema_version": "v1"}
              for k in report.extracted]
         )
-        outcome = validate_batch(raw, states, requests)
-        counts = {r["status"]: r["n"] for r in
-                  outcome.groupBy("status").count().withColumnRenamed("count", "n").collect()}
-        report.validated_success = counts.get("success", 0)
-        report.validated_failed = counts.get("failed", 0)
+        statuses = [r["status"] for r in validate_batch(raw, states, requests).collect()]
+        report.validated_success = statuses.count("success")
+        report.validated_failed = statuses.count("failed")
 
     loader = WarehouseLoader(states, pointers)
+    plan = loader.reconcile()
     if curated is not None:
-        report.staged = materialize_plan(raw, curated, loader.reconcile(),
-                                         checks=dq_checks)
-    plan = loader.run()
+        report.staged = materialize_plan(raw, curated, plan, checks=dq_checks)
+    loader.run(plan)
     report.published = plan.counts()
     return report

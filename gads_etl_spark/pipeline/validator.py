@@ -30,6 +30,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY, PartitionKey
@@ -50,40 +51,21 @@ def validate_batch(raw: RawZone, states: StateStore, requests: DataFrame) -> Dat
     run_id, schema_version). Multiple run_ids for one logical key fold as
     if validated sequentially in run_id order. Returns the merged rows.
     """
-    spark = raw.spark
     # Identical duplicate requests would double-count attempts and emit
     # duplicate outcome rows; a batch is a *set* of attempts.
     requests = requests.select(*_REQ).distinct()
 
-    # One distributed count of every requested partition: hive-discovery
-    # scan filtered by the request keys, grouped on the full attempt key.
-    # No per-partition jobs. The semi-join alone does NOT prune partition
-    # directories (no DPP for this shape), so literal IN-filters derived
-    # from the request batch are pushed first — the batch is driver-known
-    # and small, and static partition-column predicates prune the listing
-    # down to the requested run/query/date directories before any file
-    # is opened.
-    if raw._path_exists(raw.root):
-        req_rows = requests.select(*LOGICAL_KEY, "run_id").collect()
-        run_ids = sorted({r["run_id"] for r in req_rows})
-        query_names = sorted({r["query_name"] for r in req_rows})
-        dates = sorted({r["logical_date"] for r in req_rows})
-        scan = raw.read_all().where(
-            F.col("run_id").isin(run_ids)
-            & F.col("query_name").isin(query_names)
-            & F.col("logical_date").between(F.lit(dates[0]), F.lit(dates[-1]))
-        )
-        actual = (
-            scan
-            .join(F.broadcast(requests.select(*LOGICAL_KEY, "run_id")), [*LOGICAL_KEY, "run_id"], "left_semi")
-            .groupBy(*LOGICAL_KEY, "run_id")
-            .agg(F.count(F.lit(1)).alias("actual_count"))
-        )
-    else:  # nothing extracted yet — every request fails the seal check
-        actual = spark.createDataFrame(
-            [], "source string, customer_id string, query_name string, "
-                "logical_date date, run_id string, actual_count long",
-        )
+    # One distributed count over ONLY the requested (key, run_id)
+    # directories: its cost follows the batch, not the zone's history, and
+    # a bad file in another run cannot block it. The empty read schema
+    # skips schema inference; every row is still parsed (FAILFAST).
+    targets = [(PartitionKey.of(r), r["run_id"])
+               for r in requests.select(*LOGICAL_KEY, "run_id").collect()]
+    actual = (
+        raw.read_partitions(targets, schema=T.StructType([]))
+        .groupBy(*LOGICAL_KEY, "run_id")
+        .agg(F.count(F.lit(1)).alias("actual_count"))
+    )
     manifest = raw.manifest().select(
         *LOGICAL_KEY, "run_id", F.col("record_count").alias("expected_count")
     )
@@ -155,7 +137,7 @@ def validate_batch(raw: RawZone, states: StateStore, requests: DataFrame) -> Dat
     # Materialize once: the outcome rows are one per validated partition
     # (a job batch, not the whole ledger), and upsert would otherwise
     # re-execute the raw-zone count scan for each of its two actions.
-    out = spark.createDataFrame(new_rows.collect(), STATE_SCHEMA)
+    out = raw.spark.createDataFrame(new_rows.collect(), STATE_SCHEMA)
     states.upsert(out)
     return out
 

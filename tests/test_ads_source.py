@@ -198,16 +198,16 @@ class TestAdsSourceStreaming:
 
 class TestConnectorToPipeline:
     def test_connector_feeds_full_pipeline(self, registered, tmp_path):
-        """API connector → bulk extract → raw seal → validate → publish →
+        """API connector → set-based extract → raw seal → validate → publish →
         consumer read: the reference's whole daily flow with the source
         swapped from parquet fixtures to the DataSource connector."""
         from datetime import date
 
         from gads_etl_spark.pipeline import (
-            PointerStore, RawZone, StateStore, WarehouseLoader,
+            PartitionKey, PointerStore, RawZone, StateStore, WarehouseLoader,
         )
         from gads_etl_spark.pipeline.consumer import read_published
-        from gads_etl_spark.pipeline.extract import QueryDefinition, extract_day_bulk
+        from gads_etl_spark.pipeline.extract import QueryDefinition, extract_partition
         from gads_etl_spark.pipeline.validator import validate_batch
 
         day = date(2024, 3, 2)
@@ -218,24 +218,21 @@ class TestConnectorToPipeline:
             .option("end_date", "2024-03-03")
             .option("rows_per_day", "25")
             .load()
-            # The extractor adds its own customer_id layout column; keep
-            # the API's copy under its payload name (GAQL: customer.id).
-            .withColumnRenamed("customer_id", "api_customer_id")
         )
+        # The API's customer_id field is the partition column itself.
         qdef = QueryDefinition(
             name="campaign_stats", entity="campaign",
             date_column="segments_date",
-            fields=("campaign_id", "api_customer_id", "segments_date",
+            fields=("campaign_id", "customer_id", "segments_date",
                     "clicks", "cost_micros"),
         )
         raw = RawZone(registered, str(tmp_path / "raw"))
         states = StateStore(registered, str(tmp_path / "state"))
         pointers = PointerStore(registered, str(tmp_path / "ptr"))
 
-        metas = extract_day_bulk(
-            source, raw, qdef, customer_col="api_customer_id",
-            logical_date=day, run_id="run-api",
-        )
+        keys = [PartitionKey("google_ads", c, "campaign_stats", day)
+                for c in ("901", "902", "903")]
+        metas = extract_partition(source, raw, qdef, keys, "run-api", day, day)
         assert len(metas) == 3                      # one partition per customer
         assert all(m["record_count"] == 25 for m in metas)  # one day's rows only
 

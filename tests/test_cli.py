@@ -228,7 +228,7 @@ queries:
   - name: campaign_stats
     entity: campaign
     date_column: segments.date
-    fields: [campaign.id, segments.date, metrics.clicks]
+    fields: [customer.id, campaign.id, segments.date, metrics.clicks]
 """
 
     @pytest.fixture
@@ -236,7 +236,7 @@ queries:
         from pyspark.sql import Row
 
         (tmp_path / "cfg.yaml").write_text(self.YAML)
-        rows = [Row(campaign=Row(id=c), segments=Row(date=d),
+        rows = [Row(customer=Row(id="123"), campaign=Row(id=c), segments=Row(date=d),
                     metrics=Row(clicks=c * 10))
                 for d in ("2024-01-01", "2024-01-02") for c in (1, 2)]
         spark.createDataFrame(rows).write.parquet(

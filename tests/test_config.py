@@ -38,6 +38,13 @@ class TestConfig:
         assert q.entity == "campaign"
         assert q.flat_name("campaign.id") == "campaign_id"
 
+    def test_customer_path(self):
+        # The source's customer_id column, or a field flattening to it.
+        q = load_config(YAML).query("campaign_stats")
+        assert q.customer_path == "customer_id"
+        assert type(q)(q.name, q.entity, q.date_column,
+                       ("customer.id", *q.fields)).customer_path == "customer.id"
+
     def test_missing_key_fails_fast(self):
         with pytest.raises(ValueError, match="missing required key"):
             load_config("queries:\n  - name: x\n    entity: y\n"

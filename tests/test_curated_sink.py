@@ -3,6 +3,7 @@ reference curated_sink.py:35-74, warehouse_semantics.md:18-43)."""
 
 from __future__ import annotations
 
+import os
 from datetime import date
 
 import pytest
@@ -109,23 +110,47 @@ def test_replace_stages_new_run_only(spark, zones):
     visible = read_published(curated, pointers)
     assert visible.count() == 2  # only run-b, no mixed run_ids
 
-def test_dq_gate_blocks_staging(spark, zones):
-    """A payload constraint violation stages NOTHING — no unsealed
-    debris, partition absent from the curated zone entirely."""
-    from gads_etl_spark.operators import dq
-    from gads_etl_spark.pipeline.curated_sink import stage_partition
 
-    _, curated, _, _ = zones
-    bad = spark.createDataFrame(
-        [(1, 5), (None, 7)], "campaign_id long, clicks long")
-    with pytest.raises(dq.DataQualityError, match=r"not_null\(campaign_id\): 1"):
-        stage_partition(curated, bad, KEY, "run-dq",
-                        checks=[dq.not_null("campaign_id")])
-    assert not curated.is_sealed(KEY, "run-dq")
+def test_unsealed_raw_target_fails_staging(spark, zones):
+    """A validated partition whose raw directory is not where the seal
+    check looks (here: moved to the unescaped run_id directory older
+    layouts used) fails staging loudly instead of staging and publishing
+    0 rows."""
+    raw, curated, states, pointers = zones
+    run_id = "2024-01-01T00:00:00.000Z"
+    raw.write_partition(_payload(spark), KEY, run_id)
+    validate_partition(raw, states, KEY, run_id)
+    path = raw.partition_path(KEY, run_id)
+    os.rename(path, path.replace("%3A", ":"))
+
+    loader = WarehouseLoader(states, pointers)
+    with pytest.raises(FileNotFoundError, match="not sealed"):
+        materialize_plan(raw, curated, loader.reconcile())
     assert curated.manifest().count() == 0
-    # clean payload with the same gate stages normally
-    meta = stage_partition(curated, _payload(spark), KEY, "run-dq",
-                           checks=[dq.not_null("campaign_id"),
-                                   dq.unique("campaign_id")])
-    assert meta["record_count"] == 4
+    assert read_published(curated, pointers).count() == 0
+
+
+def test_dq_gate_blocks_staging(spark, zones):
+    """Checks run per logical partition before anything is written: a
+    violating partition stages NOTHING — no unsealed debris, absent from
+    the curated zone entirely — while a clean one stages, and the error
+    names the violation."""
+    from gads_etl_spark.operators import dq
+
+    raw, curated, states, pointers = zones
+    bad_key = PartitionKey("google_ads", "456", "campaign_stats", date(2024, 1, 1))
+    raw.write_partition(_payload(spark), KEY, "run-dq")
+    raw.write_partition(spark.createDataFrame(
+        [(1, 5), (None, 7)], "campaign_id long, clicks long"), bad_key, "run-dq")
+    for k in (KEY, bad_key):
+        validate_partition(raw, states, k, "run-dq")
+    plan = WarehouseLoader(states, pointers).reconcile()
+    checks = [dq.not_null("campaign_id"), dq.unique("campaign_id")]
+
+    with pytest.raises(dq.DataQualityError, match=r"not_null\(campaign_id\): 1 violations"):
+        materialize_plan(raw, curated, plan, checks=checks)
+    assert not curated.is_sealed(bad_key, "run-dq")
+    assert not os.path.exists(curated.partition_path(bad_key, "run-dq"))
+    assert curated.manifest().count() == 1
     assert curated.is_sealed(KEY, "run-dq")
+    assert curated.read_partition(KEY, "run-dq").count() == 4

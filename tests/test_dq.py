@@ -133,3 +133,22 @@ class TestEmptyInput:
         got = _result(empty, [dq.not_null("id"), dq.in_set("lang", ("en",))])
         assert got == {"not_null(id)": 0, "in_set(lang)": 0}
         assert all(v is not None for v in got.values())
+
+
+class TestPerGroupChecks:
+    def test_grouped_counts_equal_per_group_run_checks(self, spark, frame):
+        """``run_checks_by`` in one grouped aggregate gives, for each
+        group, exactly what ``run_checks`` gives on that group's rows."""
+        dim = spark.createDataFrame([(1,), (2,), (3,)], "pk int")
+        checks = [
+            dq.not_null("id"), dq.in_set("lang", ("en", "fr")),
+            dq.in_range("n", 0, 100), dq.unique("id"),
+            dq.ref_integrity(["id"], dim, ["pk"]),
+        ]
+        grouped = frame.withColumn("g", (F.col("n") > 15).cast("int"))
+        got = {(r["g"], r["check"]): r["n_violations"]
+               for r in dq.run_checks_by(grouped, checks, ["g"]).collect()}
+        want = {(g, c): n for g in (0, 1)
+                for c, n in _result(grouped.where(F.col("g") == g), checks).items()}
+        assert got == want
+        assert got[(1, "ref(id)")] == 2  # ids 4 and 4 are orphans; null id is not

@@ -27,7 +27,7 @@ QDEF = QueryDefinition(
     name="campaign_stats",
     entity="campaign",
     date_column="segments.date",
-    fields=("campaign.id", "campaign.name", "segments.date",
+    fields=("customer.id", "campaign.id", "campaign.name", "segments.date",
             "metrics.clicks", "metrics.cost_micros"),
 )
 
@@ -36,7 +36,7 @@ def _nested_source(spark):
     """Proto-shaped nested rows (reference pipeline.py:99-105 walks
     row.campaign.id attribute chains)."""
     rows = [
-        Row(campaign=Row(id=c, name=f"camp-{c}"),
+        Row(customer=Row(id="123"), campaign=Row(id=c, name=f"camp-{c}"),
             segments=Row(date=d),
             metrics=Row(clicks=c * 10 + i, cost_micros=c * 1000 + i))
         for i, d in enumerate(["2024-01-01", "2024-01-02"])
@@ -58,20 +58,28 @@ def _key(d):
     return PartitionKey("google_ads", "123", "campaign_stats", d)
 
 
+def _extract(source, raw, qdef, d, run_id):
+    """One day's partition of customer 123."""
+    (meta,) = extract_partition(source, raw, qdef, [_key(d)], run_id, d, d)
+    return meta
+
+
 def test_full_lifecycle(spark, stores):
     raw, states, pointers = stores
     source = _nested_source(spark)
 
     # E1: extract both days under one run, sealed metadata-last.
     for d in (date(2024, 1, 1), date(2024, 1, 2)):
-        meta = extract_partition(source, raw, QDEF, _key(d), "run-a")
+        meta = _extract(source, raw, QDEF, d, "run-a")
         assert meta["record_count"] == 3
 
-    # Flattened payload: dot-paths became snake_case + provenance column.
+    # Flattened payload: dot-paths became snake_case + provenance column,
+    # plus the partition's layout columns.
     payload = raw.read_partition(_key(date(2024, 1, 1)), "run-a")
     assert set(payload.columns) == {
         "campaign_id", "campaign_name", "segments_date",
         "metrics_clicks", "metrics_cost_micros", "__query_name",
+        "source", "customer_id", "query_name", "logical_date", "run_id",
     }
     assert payload.select("__query_name").distinct().collect()[0][0] == "campaign_stats"
 
@@ -102,13 +110,13 @@ def test_superseding_run_replaces_and_old_rows_invisible(spark, stores):
     source = _nested_source(spark)
     k = _key(date(2024, 1, 1))
 
-    extract_partition(source, raw, QDEF, k, "run-a")
+    _extract(source, raw, QDEF, k.logical_date, "run-a")
     validate_partition(raw, states, k, "run-a")
     WarehouseLoader(states, pointers).run()
 
     # Second attempt with fewer rows (source drift) under a newer run.
     smaller = source.where(F.col("campaign.id") < 3)
-    extract_partition(smaller, raw, QDEF, k, "run-b")
+    _extract(smaller, raw, QDEF, k.logical_date, "run-b")
     validate_partition(raw, states, k, "run-b")
     plan = WarehouseLoader(states, pointers).run()
     assert plan.counts() == {"load": 0, "replace": 1, "demote": 0}
@@ -122,7 +130,7 @@ def test_superseding_run_replaces_and_old_rows_invisible(spark, stores):
 def test_missing_config_field_fails_fast(spark, stores):
     raw, _, _ = stores
     bad = QueryDefinition("q", "campaign", "segments.date",
-                          ("campaign.id", "campaign.nonexistent"))
+                          ("customer.id", "campaign.id", "campaign.nonexistent"))
     with pytest.raises(Exception) as exc:
-        extract_partition(_nested_source(spark), raw, bad, _key(date(2024, 1, 1)), "run-x")
+        _extract(_nested_source(spark), raw, bad, date(2024, 1, 1), "run-x")
     assert "nonexistent" in str(exc.value)

@@ -169,6 +169,23 @@ class TestValidator:
         # exactly one new committed version
         assert states._table._current_version() != versions_before
 
+    def test_validation_reads_only_requested_partitions(self, spark, zone, states):
+        """A malformed payload in an older run's directory must not block
+        validating a new run: the count opens only the requested
+        partitions' directories, not the whole zone's history."""
+        zone.write_partition(_payload(spark), KEY, "run-a")
+        old_dir = zone.partition_path(KEY, "run-a")
+        with open(f"{old_dir}/part-corrupt.json", "w") as fh:
+            fh.write("{not json\n")
+        zone.write_partition(_payload(spark, 7), KEY, "run-b")
+
+        row = validate_partition(zone, states, KEY, "run-b")
+        assert row["status"] == "success"
+        assert row["record_count"] == 7
+        # ...while the corrupt partition itself still fails loudly.
+        with pytest.raises(Exception, match="FAILFAST|Malformed"):
+            validate_partition(zone, states, KEY, "run-a")
+
     def test_batch_equals_sequential(self, spark, zone, states, tmp_path):
         """Folding property: validating [run-a, run-b] in one batch equals
         validating them one at a time (authority, attempts, status)."""
