@@ -6,9 +6,10 @@ published pointer set defines exactly which ``(logical key, run_id)``
 directories are visible; everything else (unsealed attempts, superseded
 runs, failed partitions) does not exist for a reader.
 
-Scale shape: one hive-discovery scan of the raw zone semi-joined against
-the pointer table on (key, run_id) — partition pruning eliminates
-non-published directories before any payload bytes are read.
+Scale shape: the pointer set is collected (one row per logical
+partition) and exactly its ``(key, run_id)`` directories are listed and
+read — superseded runs, unsealed attempts and any bad file outside the
+published set are never opened.
 """
 
 from __future__ import annotations
@@ -17,28 +18,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gads_etl_spark.pipeline.keys import LOGICAL_KEY
+from gads_etl_spark.pipeline.keys import LOGICAL_KEY, PartitionKey
 from gads_etl_spark.pipeline.pointer_store import PointerStore
 from gads_etl_spark.pipeline.raw_sink import RawZone
 
 
 def read_published(raw: RawZone, pointers: PointerStore) -> DataFrame:
-    """All consumer-visible rows: zone ⋉ published pointers.
-
-    The semi-join filters rows, not directories — Spark does not apply
-    dynamic partition pruning to this shape (measured), so over the RAW
-    zone superseded run_id directories are still *read* before being
-    discarded. That is why the scale read path is the CURATED zone: it
-    stages only published runs (curated_sink.materialize_plan), so the
-    same semi-join there touches no superseded data, and the pointer
-    check is a cheap consistency guard rather than the filter doing the
-    heavy lifting. Reading raw through this function is correct at any
-    scale, just not I/O-minimal when many superseded runs exist.
+    """All consumer-visible rows: the published ``(key, run_id)``
+    directories, read the way ``validate_batch`` reads its targets
+    (``RawZone.read_partitions``). The payload schema is inferred from
+    those directories only, so a malformed superseded payload cannot fail
+    a consumer read, and the cost follows the published set, not the
+    zone's history. A published partition with no directory in ``raw``
+    (e.g. a curated zone that has not staged it) contributes no rows.
     """
-    published = pointers.read().select(*LOGICAL_KEY, "run_id")
-    return raw.read_all().join(
-        F.broadcast(published), [*LOGICAL_KEY, "run_id"], "left_semi"
-    )
+    published = pointers.read().select(*LOGICAL_KEY, "run_id").collect()
+    return raw.read_partitions([(PartitionKey.of(r), r["run_id"]) for r in published])
 
 
 def preview(raw: RawZone, pointers: PointerStore, sample_rows: int = 5,

@@ -54,10 +54,6 @@ class PlanResult:
                 "executed": self.executed}
 
 
-def _now():
-    return datetime.now(timezone.utc).replace(tzinfo=None)
-
-
 def terminal_message(error: F.Column) -> F.Column:
     """Idempotent ``[terminal]`` prepend (reference cli.py:667-674)."""
     base = F.coalesce(error, F.lit(""))
@@ -125,7 +121,7 @@ class ControlPlane:
                 *[f.name for f in STATE_SCHEMA.fields if f.name not in
                   ("status", "updated_at", "error_message")],
                 F.lit("pending").alias("status"),
-                F.lit(_now()).alias("updated_at"),
+                F.lit(datetime.now(timezone.utc)).alias("updated_at"),
                 (F.lit(None).cast("string") if clear_terminal
                  else F.col("error_message")).alias("error_message"),
             )
@@ -155,7 +151,7 @@ class ControlPlane:
             updates = candidates.select(
                 *[f.name for f in STATE_SCHEMA.fields if f.name not in
                   ("updated_at", "error_message")],
-                F.lit(_now()).alias("updated_at"),
+                F.lit(datetime.now(timezone.utc)).alias("updated_at"),
                 terminal_message(F.col("error_message")).alias("error_message"),
             )
             self._states.upsert(updates)
@@ -220,7 +216,7 @@ class ControlPlane:
             *key_cols,
             F.lit("pending").alias("status"),
             "current_run_id", "schema_version", "record_count",
-            F.lit(_now()).alias("updated_at"),
+            F.lit(datetime.now(timezone.utc)).alias("updated_at"),
             F.lit(None).cast("string").alias("error_message"),
             F.coalesce(F.col("attempt_count"), F.lit(0)).alias("attempt_count"),
         )

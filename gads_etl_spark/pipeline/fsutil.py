@@ -17,14 +17,24 @@ Spark's own readers and writers.
 from __future__ import annotations
 
 import uuid
+import weakref
+
+#: SparkContext → (Hadoop ``Path`` class, the context's live Hadoop
+#: configuration). Resolving either costs Py4J round trips (one per
+#: package segment for the class), and every helper below needs both.
+_HADOOP: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def get_fs(spark, path: str):
     """Resolve ``(FileSystem, Path)`` for a URI or local path."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
+    sc = spark.sparkContext
+    hadoop = _HADOOP.get(sc)
+    if hadoop is None:
+        hadoop = _HADOOP[sc] = (sc._jvm.org.apache.hadoop.fs.Path,
+                                sc._jsc.hadoopConfiguration())
+    path_class, conf = hadoop
+    hpath = path_class(path)
+    return hpath.getFileSystem(conf), hpath
 
 
 def exists(spark, path: str) -> bool:

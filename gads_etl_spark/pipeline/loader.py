@@ -23,15 +23,23 @@ shuffle — or a broadcast join if one side fits.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from gads_etl_spark.pipeline.frames import local_frame
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY
 from gads_etl_spark.pipeline.pointer_store import POINTER_SCHEMA, PointerStore
-from gads_etl_spark.pipeline.state_store import StateStore
+from gads_etl_spark.pipeline.state_store import STATE_SCHEMA, StateStore
+
+#: A load or replace target: the logical key and the run to publish.
+TARGET_SCHEMA = T.StructType(
+    [STATE_SCHEMA[c] for c in (*LOGICAL_KEY, "current_run_id", "schema_version")])
 
 
 @dataclass(frozen=True)
@@ -40,7 +48,7 @@ class ReconciliationPlan:
 
     ``load``/``replace`` carry the logical key + target run_id/schema_version;
     ``demote`` carries the stale pointer rows. ``sizes`` are their row
-    counts, observed while the plan was materialized.
+    counts, taken when the plan was materialized.
     """
 
     load: DataFrame
@@ -91,34 +99,35 @@ class WarehouseLoader:
     def reconcile(self) -> ReconciliationPlan:
         """Build the plan without mutating anything (dry-run friendly).
 
-        The non-noop delta and the demote set are each materialized ONCE
-        (``localCheckpoint``), with their sizes observed on that same
-        pass: staging, publishing and ``counts()`` then read a fixed
-        snapshot instead of re-running the joins, and the plan stays
-        what it was when reconciled even after pointers move.
+        The non-noop delta and the demote set are what this sync changes,
+        not the ledger: each comes to the driver ONCE, as Arrow, and the
+        plan holds them as local frames with their sizes counted there.
+        Staging, publishing and ``counts()`` then read a fixed snapshot
+        instead of re-running the joins, and the plan stays what it was
+        when reconciled even after pointers move.
         """
         success = self._states.read().where(F.col("status") == "success")
         ptrs = self._pointers.read()
-        target_cols = [*LOGICAL_KEY, "current_run_id", "schema_version"]
-        delta_obs, demote_obs = Observation(), Observation()
         delta = (
             classify_targets(success, ptrs)
-            .observe(delta_obs,
-                     *[F.count_if(F.col("action") == a).alias(a) for a in ("load", "replace")])
             .where(F.col("action") != "noop")
-            .select(*target_cols, "action")
-            .localCheckpoint()
+            .select(*TARGET_SCHEMA.fieldNames(), "action")
+            .toArrow()
         )
-        demote = (
-            demotion_targets(success, ptrs)
-            .observe(demote_obs, F.count(F.lit(1)).alias("demote"))
-            .localCheckpoint()
-        )
+        demote = demotion_targets(success, ptrs).select(*POINTER_SCHEMA.fieldNames()).toArrow()
+        spark = self._states.spark
+        actions = Counter(delta.column("action").to_pylist())
+
+        def targets(action: str) -> DataFrame:
+            rows = delta.filter(pc.equal(delta["action"], action)).drop_columns("action")
+            return local_frame(spark, rows, TARGET_SCHEMA)
+
         return ReconciliationPlan(
-            load=delta.where(F.col("action") == "load").select(*target_cols),
-            replace=delta.where(F.col("action") == "replace").select(*target_cols),
-            demote=demote,
-            sizes={**delta_obs.get, **demote_obs.get},
+            load=targets("load"),
+            replace=targets("replace"),
+            demote=local_frame(spark, demote, POINTER_SCHEMA),
+            sizes={"load": actions["load"], "replace": actions["replace"],
+                   "demote": demote.num_rows},
         )
 
     def run(self, plan: ReconciliationPlan | None = None) -> ReconciliationPlan:
@@ -133,7 +142,7 @@ class WarehouseLoader:
         return plan
 
     def _publish(self, plan: ReconciliationPlan) -> None:
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        now = datetime.now(timezone.utc)
         targets = plan.load.unionByName(plan.replace)
         updates = targets.select(
             *LOGICAL_KEY,

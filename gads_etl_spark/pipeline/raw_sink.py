@@ -22,6 +22,8 @@ The seal is two artifacts written in order:
 2. A row appended to the ``_manifest`` parquet table — the queryable
    index used by validators/loaders. ``seal_many`` appends one file per
    *batch*, not per partition, so manifest file count tracks job count.
+   The batch's rows are an Arrow-backed local frame (``frames.py``), so
+   the append is one JVM-only write task, no Python worker.
 
 Scale notes: a batch of partitions is ONE ``partitionBy`` job, with
 Spark's own escaped directory names (a run_id's ``:`` is ``%3A``); the
@@ -42,6 +44,7 @@ from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from gads_etl_spark.pipeline import fsutil
+from gads_etl_spark.pipeline.frames import local_frame
 from gads_etl_spark.pipeline.keys import LAYOUT, PartitionKey, escape_path_name
 
 MANIFEST_SCHEMA = T.StructType([
@@ -118,12 +121,12 @@ class RawZone:
         read failure would make ``is_sealed`` return False and break the
         immutability contract — reference raw_sink_local.py:34-36)."""
         if not self._path_exists(self._manifest_dir):
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(self.spark, [], MANIFEST_SCHEMA)
         try:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self._manifest_dir)
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" in str(exc):
-                return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+                return local_frame(self.spark, [], MANIFEST_SCHEMA)
             raise
 
     def _marker_path(self, key: PartitionKey, run_id: str) -> str:
@@ -200,12 +203,8 @@ class RawZone:
         if count_mode == "observe":
             counts = {targets[0]: int(obs.get["n_rows"])} if obs else {}
         else:
-            # Empty read schema: no inference pass, yet every JSON row is
-            # parsed (FAILFAST), so a malformed line fails the count.
-            rows = (self.read_partitions(targets, schema=T.StructType([]))
-                    .groupBy(*LAYOUT).count().collect())
-            counts = {(PartitionKey.of(r), r["run_id"]): r["count"] for r in rows}
-        extracted_at = datetime.now(timezone.utc).replace(tzinfo=None)
+            counts = self.count_partitions(targets)
+        extracted_at = datetime.now(timezone.utc)
         sealed = [{"api_version": None, "query_signature": None, **m,
                    "extracted_at": extracted_at, "record_count": counts.get(t, 0)}
                   for m, t in zip(metas, targets)]
@@ -219,7 +218,10 @@ class RawZone:
     def seal_many(self, metas: list[dict]) -> None:
         """Batch seal: one marker per partition + ONE manifest append for
         the whole batch (manifest file count stays proportional to jobs,
-        not partitions — the small-files fix)."""
+        not partitions — the small-files fix). The rows go through Arrow
+        (``local_frame``), so the append is a one-task JVM write with no
+        Python worker. ``extracted_at`` is an instant: pass it tz-aware
+        (a naive value is read as UTC)."""
         if not metas:
             return
         markers = {}
@@ -233,7 +235,7 @@ class RawZone:
             markers[marker] = meta
         for marker, meta in markers.items():
             self._write_file_atomic(marker, json.dumps({k: str(v) for k, v in meta.items()}))
-        rows = self.spark.createDataFrame(metas, MANIFEST_SCHEMA)
+        rows = local_frame(self.spark, metas, MANIFEST_SCHEMA)
         rows.coalesce(1).write.mode("append").parquet(self._manifest_dir)
 
     def compact_manifest(self) -> int:
@@ -283,6 +285,16 @@ class RawZone:
         paths = [self.partition_path(k, r) for k, r in targets]
         return self._read([p for p in paths if self._path_exists(p)], schema)
 
+    def count_partitions(self, targets) -> dict[tuple[PartitionKey, str], int]:
+        """Row counts of the given ``(key, run_id)`` partitions from one
+        grouped read of just their directories; an absent or empty one
+        has no entry. The empty read schema skips inference, yet every
+        JSON row is parsed (FAILFAST), so a malformed line fails the
+        count."""
+        rows = (self.read_partitions(targets, schema=T.StructType([]))
+                .groupBy(*LAYOUT).count().collect())
+        return {(PartitionKey.of(r), r["run_id"]): r["count"] for r in rows}
+
     def read_all(self, schema: T.StructType | None = None) -> DataFrame:
         """Read the whole zone with hive partition discovery (payload +
         the five layout columns)."""
@@ -303,7 +315,7 @@ class RawZone:
         payload = [f for f in (schema.fields if schema else []) if f.name not in LAYOUT]
         full = T.StructType([*payload, *LAYOUT_SCHEMA.fields])
         if not paths:
-            return self.spark.createDataFrame([], full)
+            return local_frame(self.spark, [], full)
         return self._reader().schema(full).load(paths)
 
     def _reader(self):

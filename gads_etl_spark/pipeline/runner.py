@@ -28,12 +28,13 @@ from pyspark.sql import DataFrame, SparkSession
 from gads_etl_spark.pipeline.config import PipelineConfig, plan_daily_runs
 from gads_etl_spark.pipeline.curated_sink import CuratedZone, materialize_plan
 from gads_etl_spark.pipeline.extract import extract_partition
+from gads_etl_spark.pipeline.frames import local_frame
 from gads_etl_spark.pipeline.keys import PartitionKey, new_run_id
 from gads_etl_spark.pipeline.loader import WarehouseLoader
 from gads_etl_spark.pipeline.pointer_store import PointerStore
 from gads_etl_spark.pipeline.raw_sink import RawZone
 from gads_etl_spark.pipeline.state_store import StateStore
-from gads_etl_spark.pipeline.validator import validate_batch
+from gads_etl_spark.pipeline.validator import REQUEST_SCHEMA, validate_batch
 
 
 @dataclass
@@ -94,10 +95,9 @@ def run_daily(
             report.extract_errors.update(dict.fromkeys(keys, str(exc)))
 
     if report.extracted:
-        requests = spark.createDataFrame(
-            [{**k.as_dict(), "run_id": report.run_id, "schema_version": "v1"}
-             for k in report.extracted]
-        )
+        requests = local_frame(
+            spark, [{**k.as_dict(), "run_id": report.run_id, "schema_version": "v1"}
+                    for k in report.extracted], REQUEST_SCHEMA)
         statuses = [r["status"] for r in validate_batch(raw, states, requests).collect()]
         report.validated_success = statuses.count("success")
         report.validated_failed = statuses.count("failed")

@@ -44,13 +44,16 @@ from __future__ import annotations
 
 import json
 import uuid
+from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from gads_etl_spark.pipeline import fsutil, spark_hash
+from gads_etl_spark.pipeline.frames import local_frame
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY
 
 STATE_SCHEMA = T.StructType([
@@ -281,14 +284,31 @@ class _VersionedTable:
         # evaluated JVM-side.
         return F.pmod(F.hash(*self.key_cols), F.lit(self.n_buckets))
 
-    def _touched_buckets(self, df: DataFrame) -> list[int]:
-        rows = df.select(self._bucket_expr().alias("b")).distinct().collect()
-        return sorted(r["b"] for r in rows)  # ≤ n_buckets values
+    def _snapshot(self, df: DataFrame,
+                  schema: T.StructType) -> tuple[pa.Table, list[int]]:
+        """``df``'s ``schema`` columns on the driver as Arrow, plus the
+        buckets its keys fall in, from one job. Only for Δ-sized control
+        batches (validator outcomes, publish and demote sets): every later
+        step of a MERGE or delete reads this snapshot as a local frame,
+        so the batch's lineage runs once and the bucket probe costs no
+        job of its own."""
+        rows = df.select(*schema.fieldNames(), self._bucket_expr().alias(_BUCKET_COL)).toArrow()
+        touched = sorted(set(rows.column(_BUCKET_COL).to_pylist()))  # ≤ n_buckets
+        return rows.drop_columns(_BUCKET_COL), touched
 
-    def _write_buckets(self, df: DataFrame, version: str) -> dict[str, str]:
+    def _key_schema(self) -> T.StructType:
+        return T.StructType([self.schema[c] for c in self.key_cols])
+
+    def _touched_buckets(self, df: DataFrame) -> list[int]:
+        return self._snapshot(df, self._key_schema())[1]
+
+    def _write_buckets(self, df: DataFrame, version: str,
+                       width: int | None = None) -> dict[str, str]:
         """Write ``df`` hash-partitioned by bucket; return bucket → dir.
 
-        One shuffle with bounded width (n_buckets tasks) replaces the old
+        One shuffle with bounded width (``width`` tasks, n_buckets by
+        default; a MERGE passes its touched-bucket count, so a one-key
+        batch is one write task, not n_buckets) replaces the old
         ``coalesce(1)`` single-task rewrite; the hive-style ``bucket=``
         write yields at most a few files per bucket. The data dir carries
         a per-attempt token: two writers racing to the same version write
@@ -299,7 +319,7 @@ class _VersionedTable:
         (
             df.select([f.name for f in self.schema.fields])
             .withColumn(_BUCKET_COL, self._bucket_expr())
-            .repartition(self.n_buckets, _BUCKET_COL)
+            .repartition(width or self.n_buckets, _BUCKET_COL)
             .write.partitionBy(_BUCKET_COL)
             .parquet(data_dir)
         )
@@ -311,16 +331,14 @@ class _VersionedTable:
 
     def _read_paths(self, paths: list[str]) -> DataFrame:
         if not paths:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         return self.spark.read.schema(self.schema).parquet(*paths)
 
     # -- public API -------------------------------------------------------
 
     def read(self) -> DataFrame:
         manifest = self._current_manifest()
-        if manifest is None:
-            return self.spark.createDataFrame([], self.schema)
-        return self._read_paths(list(manifest["buckets"].values()))
+        return self._read_paths(list(manifest["buckets"].values()) if manifest else [])
 
     def read_bucket_for(self, key_values: tuple) -> DataFrame:
         """Read ONLY the bucket that can contain ``key_values`` — the
@@ -343,7 +361,7 @@ class _VersionedTable:
             return self.read()
         manifest = self._current_manifest()
         if manifest is None:
-            return self.spark.createDataFrame([], self.schema)
+            return self._read_paths([])
         types = {f.name: f.dataType for f in self.schema.fields}
         dtypes = tuple(types[c] for c in self.key_cols)
         # Driver-side Murmur3 (spark_hash.py, property-pinned against the
@@ -358,9 +376,8 @@ class _VersionedTable:
                 F.pmod(F.hash(*lits), F.lit(self.n_buckets)).alias("b")
             ).collect()[0]["b"]
         path = manifest["buckets"].get(str(b))
-        if path is None:  # bucket currently holds no rows at all
-            return self.spark.createDataFrame([], self.schema)
-        return self._read_paths([path])
+        # A bucket that currently holds no rows at all has no path.
+        return self._read_paths([path] if path else [])
 
     def commit(self, df: DataFrame) -> None:
         """Full-table replace: write every bucket fresh, swap the pointer.
@@ -375,32 +392,34 @@ class _VersionedTable:
         buckets = self._write_buckets(df, version)
         self._publish(version, parent, buckets)
 
-    def merge(self, updates: DataFrame) -> None:
+    def merge(self, updates: DataFrame,
+              check: Callable[[pa.Table], None] | None = None) -> None:
         """MERGE touching only buckets that contain updated keys — O(Δ).
 
         Buckets without any updated key are carried into the new manifest
         by reference: their files are not read, not rewritten, not moved.
+        The updates (often a validator join) are Δ-sized by contract and
+        come to the driver once (``_snapshot``); ``check`` vets those rows
+        before anything is written.
         """
         if self.key_cols is None:
             raise ValueError("merge requires key_cols")
+        rows, touched = self._snapshot(updates, self.schema)
+        if check is not None:
+            check(rows)
+        updates = local_frame(self.spark, rows, self.schema)
         parent = self._current_manifest()
+        version = self._next_version(parent)
         if parent is None or not parent["buckets"]:
-            self.commit(updates)
+            self._publish(version, parent,
+                          self._write_buckets(updates, version, len(touched)))
             return
-        # The updates lineage (often a validator join) is consumed twice —
-        # once by the touched-bucket probe, once by the bucket write.
-        # Materialize it once; control batches are Δ-sized by contract.
-        updates = updates.select(
-            [f.name for f in self.schema.fields]
-        ).localCheckpoint(eager=True)
-        touched = self._touched_buckets(updates)
         buckets = dict(parent["buckets"])
         current = self._read_paths(
             [buckets[str(k)] for k in touched if str(k) in buckets]
         )
         merged = merge_upsert(current, updates, self.key_cols)
-        version = self._next_version(parent)
-        buckets.update(self._write_buckets(merged, version))
+        buckets.update(self._write_buckets(merged, version, len(touched)))
         self._publish(version, parent, buckets)
 
     def delete_keys(self, keys: DataFrame) -> None:
@@ -410,19 +429,18 @@ class _VersionedTable:
         parent = self._current_manifest()
         if parent is None or not parent["buckets"]:
             return
-        keys = keys.select(*self.key_cols).localCheckpoint(eager=True)
-        touched = self._touched_buckets(keys)
+        rows, touched = self._snapshot(keys, self._key_schema())
         buckets = dict(parent["buckets"])
         touched_present = [k for k in touched if str(k) in buckets]
         if not touched_present:
             return
         current = self._read_paths([buckets[str(k)] for k in touched_present])
         remaining = current.join(
-            keys.select(*self.key_cols).distinct(), list(self.key_cols),
-            "left_anti",
+            local_frame(self.spark, rows, self._key_schema()).distinct(),
+            list(self.key_cols), "left_anti",
         )
         version = self._next_version(parent)
-        rewritten = self._write_buckets(remaining, version)
+        rewritten = self._write_buckets(remaining, version, len(touched_present))
         for k in touched_present:
             if str(k) in rewritten:
                 buckets[str(k)] = rewritten[str(k)]
@@ -502,6 +520,11 @@ class _VersionedTable:
         return len(drop)
 
 
+def _check_statuses(rows: pa.Table) -> None:
+    if not set(rows.column("status").to_pylist()) <= set(VALID_STATUSES):
+        raise ValueError(f"status must be one of {VALID_STATUSES}")
+
+
 class StateStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -514,10 +537,7 @@ class StateStore:
     def upsert(self, updates: DataFrame) -> None:
         """MERGE updates into the ledger (M1 — state_store.py:123-163).
         Only buckets containing updated keys are rewritten."""
-        bad = updates.where(~F.col("status").isin(*VALID_STATUSES)).limit(1).count()
-        if bad:
-            raise ValueError(f"status must be one of {VALID_STATUSES}")
-        self._table.merge(updates)
+        self._table.merge(updates, check=_check_statuses)
 
     def commit(self, full_state: DataFrame) -> None:
         """Replace the whole ledger (control-plane bulk transitions)."""

@@ -17,31 +17,31 @@ Contract parity (reference src/gads_etl/validator.py):
 
 Scale design: the reference validates one partition per call — two point
 lookups and a ledger write each (fine for one process, a driver bottleneck
-at 10M partitions). ``validate_batch`` validates N partitions in ONE job:
-count all requested partitions with a single partition-discovery scan,
-join manifest + previous state, fold multi-run request batches with a
-window, and commit ONE state MERGE. ``validate_partition`` is the
-single-key wrapper kept for API parity.
+at 10M partitions). ``validate_batch`` validates N partitions with three
+reads of just the batch: one grouped count over the requested
+directories, their manifest rows and the keys' previous ledger rows. A
+batch is one sync's partitions, so those rows and the outcome fold
+(multi-run batches folded per key) live on the driver, and the outcome
+is ONE state MERGE. ``validate_partition`` is the single-key wrapper
+kept for API parity.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
+from gads_etl_spark.pipeline.frames import local_frame
 from gads_etl_spark.pipeline.keys import LOGICAL_KEY, PartitionKey
-from gads_etl_spark.pipeline.raw_sink import RawZone
+from gads_etl_spark.pipeline.raw_sink import MANIFEST_SCHEMA, RawZone
 from gads_etl_spark.pipeline.state_store import STATE_SCHEMA, StateStore
 
-_REQ = [*LOGICAL_KEY, "run_id", "schema_version"]
-
-
-def _now():
-    return datetime.now(timezone.utc).replace(tzinfo=None)
+#: One validation request: a sealed partition's key, run_id and version.
+REQUEST_SCHEMA = T.StructType(
+    [MANIFEST_SCHEMA[c] for c in (*LOGICAL_KEY, "run_id", "schema_version")])
 
 
 def validate_batch(raw: RawZone, states: StateStore, requests: DataFrame) -> DataFrame:
@@ -53,93 +53,84 @@ def validate_batch(raw: RawZone, states: StateStore, requests: DataFrame) -> Dat
     """
     # Identical duplicate requests would double-count attempts and emit
     # duplicate outcome rows; a batch is a *set* of attempts.
-    requests = requests.select(*_REQ).distinct()
+    reqs = list(dict.fromkeys(
+        tuple(r) for r in requests.select(*REQUEST_SCHEMA.fieldNames()).collect()))
+    attempts = [(PartitionKey(*r[:4]), r[4], r[5]) for r in reqs]
+    targets = list(dict.fromkeys((key, run_id) for key, run_id, _ in attempts))
 
-    # One distributed count over ONLY the requested (key, run_id)
-    # directories: its cost follows the batch, not the zone's history, and
-    # a bad file in another run cannot block it. The empty read schema
-    # skips schema inference; every row is still parsed (FAILFAST).
-    targets = [(PartitionKey.of(r), r["run_id"])
-               for r in requests.select(*LOGICAL_KEY, "run_id").collect()]
-    actual = (
-        raw.read_partitions(targets, schema=T.StructType([]))
-        .groupBy(*LOGICAL_KEY, "run_id")
-        .agg(F.count(F.lit(1)).alias("actual_count"))
-    )
-    manifest = raw.manifest().select(
-        *LOGICAL_KEY, "run_id", F.col("record_count").alias("expected_count")
-    )
-    checked = (
-        requests
-        .join(manifest, [*LOGICAL_KEY, "run_id"], "left")
-        .join(actual, [*LOGICAL_KEY, "run_id"], "left")
-        .withColumn(
-            "ok",
-            F.col("expected_count").isNotNull()
-            & (F.coalesce(F.col("actual_count"), F.lit(0)) == F.col("expected_count")),
-        )
-        .withColumn(
-            "attempt_error",
-            F.when(F.col("expected_count").isNull(),
-                   F.concat(F.lit("no manifest row for run_id="), F.col("run_id")))
-            .when(~F.col("ok"),
-                  F.concat(F.lit("record_count mismatch: payload="),
-                           F.coalesce(F.col("actual_count"), F.lit(0)).cast("string"),
-                           F.lit(" metadata="), F.col("expected_count").cast("string"))),
-        )
-    )
+    # Three reads of ONLY the batch: the payload counts of the requested
+    # (key, run_id) directories (so a bad file in another run cannot block
+    # them; every row is parsed, FAILFAST), their manifest rows and the
+    # keys' previous ledger rows.
+    actual = raw.count_partitions(targets)
+    expected: dict[tuple, list[int]] = defaultdict(list)
+    for r in (raw.manifest().join(_frame(raw, targets, [*LOGICAL_KEY, "run_id"]),
+                                  [*LOGICAL_KEY, "run_id"], "left_semi")
+              .select(*LOGICAL_KEY, "run_id", "record_count").collect()):
+        expected[(PartitionKey.of(r), r["run_id"])].append(r["record_count"])
+    prev: dict[PartitionKey, list] = defaultdict(list)
+    for r in (states.read().join(_frame(raw, [(k,) for k, _ in targets], LOGICAL_KEY),
+                                 list(LOGICAL_KEY), "left_semi")
+              .select(*LOGICAL_KEY, "current_run_id", "schema_version",
+                      "record_count", "attempt_count").collect()):
+        prev[PartitionKey.of(r)].append(r)
 
-    # Fold multi-run batches per logical key as sequential validation in
-    # run_id order: final status = last attempt's outcome; the successful
-    # authority candidate = max successful run_id in the batch.
-    w = Window.partitionBy(*LOGICAL_KEY)
-    folded = (
-        checked
-        .withColumn("_last_run", F.max("run_id").over(w))
-        .withColumn("_n_attempts", F.count(F.lit(1)).over(w))
-        .withColumn("_best_ok_run",
-                    F.max(F.when(F.col("ok"), F.col("run_id"))).over(w))
-        .withColumn("_best_ok_count",
-                    F.max(F.when(F.col("ok"),
-                                 F.struct("run_id", "expected_count", "schema_version"))).over(w))
-        .where(F.col("run_id") == F.col("_last_run"))
-    )
+    # One checked attempt per (request, manifest row): a request without
+    # a manifest row fails, so does a payload count off the manifest's.
+    checked: dict[PartitionKey, list[tuple]] = defaultdict(list)
+    for key, run_id, version in attempts:
+        n = actual.get((key, run_id), 0)
+        for want in expected.get((key, run_id), [None]):
+            if want is None:
+                error = f"no manifest row for run_id={run_id}"
+            elif n != want:
+                error = f"record_count mismatch: payload={n} metadata={want}"
+            else:
+                error = None
+            checked[key].append((run_id, version, want, error))
 
-    prev = states.read().select(
-        *LOGICAL_KEY,
-        F.col("status").alias("prev_status"),
-        F.col("current_run_id").alias("prev_run_id"),
-        F.col("schema_version").alias("prev_schema_version"),
-        F.col("record_count").alias("prev_record_count"),
-        F.col("attempt_count").alias("prev_attempts"),
-    )
-    joined = folded.join(prev, list(LOGICAL_KEY), "left")
-
-    keep_prev = F.col("prev_run_id").isNotNull() & (
-        F.col("_best_ok_run").isNull() | (F.col("prev_run_id") > F.col("_best_ok_run"))
-    )
-    new_rows = joined.select(
-        *LOGICAL_KEY,
-        F.when(F.col("ok"), F.lit("success")).otherwise(F.lit("failed")).alias("status"),
-        # Authority: greatest of previous authority and best successful run
-        # of this batch (M3); failures never change authority (M4).
-        F.when(keep_prev, F.col("prev_run_id"))
-        .otherwise(F.col("_best_ok_run")).alias("current_run_id"),
-        F.when(keep_prev, F.col("prev_schema_version"))
-        .otherwise(F.col("_best_ok_count.schema_version")).alias("schema_version"),
-        F.when(keep_prev, F.col("prev_record_count"))
-        .otherwise(F.col("_best_ok_count.expected_count")).alias("record_count"),
-        F.lit(_now()).alias("updated_at"),
-        F.when(~F.col("ok"), F.col("attempt_error")).alias("error_message"),
-        (F.coalesce(F.col("prev_attempts"), F.lit(0)) + F.col("_n_attempts"))
-        .cast("int").alias("attempt_count"),
-    )
-    # Materialize once: the outcome rows are one per validated partition
-    # (a job batch, not the whole ledger), and upsert would otherwise
-    # re-execute the raw-zone count scan for each of its two actions.
-    out = raw.spark.createDataFrame(new_rows.collect(), STATE_SCHEMA)
+    # Fold each logical key's attempts as sequential validation in run_id
+    # order: final status = last attempt's outcome; the authority
+    # candidate = the successful attempt with the greatest run_id, unless
+    # the ledger already holds a newer one (M3); failures never change
+    # authority (M4); every attempt counts (M8).
+    now = datetime.now(timezone.utc)
+    rows = []
+    for key, tries in checked.items():
+        last = max(run_id for run_id, *_ in tries)
+        # (run_id, schema_version, record_count) of the greatest successful
+        # attempt: the batch's authority candidate.
+        best = max(((run_id, version, want) for run_id, version, want, error in tries
+                    if error is None), key=lambda a: (a[0], a[2], a[1]),
+                   default=(None, None, None))
+        for error in (error for run_id, _, _, error in tries if run_id == last):
+            for p in prev.get(key) or [None]:
+                authority = best
+                if p is not None and p["current_run_id"] is not None and (
+                        best[0] is None or p["current_run_id"] > best[0]):
+                    authority = (p["current_run_id"], p["schema_version"], p["record_count"])
+                rows.append({
+                    **key.as_dict(),
+                    "status": "failed" if error else "success",
+                    **dict(zip(("current_run_id", "schema_version", "record_count"), authority)),
+                    "updated_at": now,
+                    "error_message": error,
+                    "attempt_count": ((p and p["attempt_count"]) or 0) + len(tries),
+                })
+    # The outcome rows are one per validated partition (a job batch, not
+    # the whole ledger): a local frame, so the MERGE and the caller's
+    # actions over them run in the JVM alone.
+    out = local_frame(raw.spark, rows, STATE_SCHEMA)
     states.upsert(out)
     return out
+
+
+def _frame(raw: RawZone, rows: list[tuple], cols) -> DataFrame:
+    """The distinct ``(key, …)`` tuples of ``rows`` as a local frame with
+    the manifest's types for ``cols``."""
+    flat = {(*k.as_dict().values(), *rest) for k, *rest in rows}
+    return local_frame(raw.spark, [dict(zip(cols, r)) for r in flat],
+                       T.StructType([MANIFEST_SCHEMA[c] for c in cols]))
 
 
 def validate_partition(
@@ -151,8 +142,7 @@ def validate_partition(
 ) -> dict:
     """Single-partition wrapper over ``validate_batch`` (reference API
     shape, validator.py:23-54). Returns the new state row as a dict."""
-    req = raw.spark.createDataFrame(
-        [{**key.as_dict(), "run_id": run_id, "schema_version": schema_version}]
-    )
+    req = local_frame(raw.spark, [{**key.as_dict(), "run_id": run_id,
+                                   "schema_version": schema_version}], REQUEST_SCHEMA)
     rows = validate_batch(raw, states, req).collect()
     return rows[0].asDict()

@@ -127,6 +127,23 @@ def test_superseding_run_replaces_and_old_rows_invisible(spark, stores):
     assert visible.select("campaign_id").distinct().count() == 2
 
 
+def test_read_published_ignores_malformed_superseded_payload(spark, stores):
+    raw, states, pointers = stores
+    source = _nested_source(spark)
+    k = _key(date(2024, 1, 1))
+    _extract(source, raw, QDEF, k.logical_date, "run-a")
+    with open(raw.partition_path(k, "run-a") + "/part-bad.json", "w") as fh:
+        fh.write("{not json\n")
+    _extract(source, raw, QDEF, k.logical_date, "run-b")
+    validate_partition(raw, states, k, "run-b")
+    WarehouseLoader(states, pointers).run()
+
+    visible = read_published(raw, pointers)
+    assert visible.count() == 3
+    assert {r.run_id for r in visible.select("run_id").collect()} == {"run-b"}
+    assert preview(raw, pointers, sample_rows=1).count() == 1
+
+
 def test_missing_config_field_fails_fast(spark, stores):
     raw, _, _ = stores
     bad = QueryDefinition("q", "campaign", "segments.date",

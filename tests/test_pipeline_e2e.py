@@ -186,6 +186,35 @@ class TestValidator:
         with pytest.raises(Exception, match="FAILFAST|Malformed"):
             validate_partition(zone, states, KEY, "run-a")
 
+    def test_batch_folds_failed_last_attempt(self, spark, zone, states):
+        """One batch holding a clean run, a newer run whose payload is off
+        its manifest count and an unsealed run for another key: the key's
+        last attempt decides its status, the clean run holds authority,
+        every attempt counts, and the unsealed run fails alone."""
+        zone.write_partition(_payload(spark, 5), KEY, "run-a")
+        _payload(spark, 5).write.json(zone.partition_path(KEY, "run-b"))
+        zone.seal({**KEY.as_dict(), "run_id": "run-b",
+                   "extracted_at": __import__("datetime").datetime(2024, 1, 2),
+                   "schema_version": "v2", "record_count": 6,
+                   "api_version": None, "query_signature": None})
+        other = PartitionKey(KEY.source, KEY.customer_id, KEY.query_name, date(2024, 1, 2))
+        requests = spark.createDataFrame([
+            {**KEY.as_dict(), "run_id": "run-a", "schema_version": "v1"},
+            {**KEY.as_dict(), "run_id": "run-b", "schema_version": "v2"},
+            {**KEY.as_dict(), "run_id": "run-b", "schema_version": "v2"},
+            {**other.as_dict(), "run_id": "run-a", "schema_version": "v1"},
+        ])
+        out = {r["logical_date"]: r.asDict() for r in validate_batch(zone, states, requests).collect()}
+        row = out[KEY.logical_date]
+        assert row["status"] == "failed"
+        assert row["error_message"] == "record_count mismatch: payload=5 metadata=6"
+        assert (row["current_run_id"], row["schema_version"], row["record_count"]) == ("run-a", "v1", 5)
+        assert row["attempt_count"] == 2  # the duplicate request is one attempt
+        ghost = out[other.logical_date]
+        assert ghost["status"] == "failed" and ghost["current_run_id"] is None
+        assert ghost["error_message"] == "no manifest row for run_id=run-a"
+        assert sorted(r["status"] for r in states.read().collect()) == ["failed", "failed"]
+
     def test_batch_equals_sequential(self, spark, zone, states, tmp_path):
         """Folding property: validating [run-a, run-b] in one batch equals
         validating them one at a time (authority, attempts, status)."""
