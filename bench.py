@@ -620,7 +620,7 @@ def main() -> None:
             return
         refresh_sf10(names)
         return
-    from gads_etl_spark.session import get_session
+    from gads_etl_spark.session import get_session, run_context
 
     spark = get_session("gads-etl-spark-bench", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -632,6 +632,7 @@ def main() -> None:
                ("metric", "value", "incomplete", "unit", "queries", "sf")}
     compact["extra_total"] = out["extra_total"]
     compact["errors_n"] = len(out["errors"])
+    compact["context"] = run_context(spark)
     vt = out.get("vs_tiers")
     if vt:
         # Compact carries the self-labeling summary (median ratio vs

@@ -702,7 +702,6 @@ def edit_distance_pairs_passjoin(
     name_col: str = "name",
     max_dist: int = 2,
     candidate_budget: int | str | None = "auto",
-    _candidates_only: bool = False,
 ) -> DataFrame:
     """Exact edit-distance similarity self-join via PassJoin segment
     filtering (Li, Deng, Wang, Feng, ICDE 2011 — public method): the
@@ -832,7 +831,7 @@ def edit_distance_pairs_passjoin(
         # fixture the ciphered vocabulary's segments collide across
         # copies and the candidate stream grew 60x for 10x data
         # (155M -> 9.3B; per-row candidates fit c0 + k*copies —
-        # scripts/exp_passjoin_growth.py) while output stayed linear.
+        # DIAG_passjoin_growth.json) while output stayed linear.
         # The estimate is one keyed count-join (~a third of the join's
         # own cost) — the price of saturation arriving as a NAMED error
         # with the re-blocking remedy instead of a silently
@@ -880,15 +879,8 @@ def edit_distance_pairs_passjoin(
                 f"super-linearly in the corpus. Raise the budget to "
                 f"force the run, or re-block (finer block_cols) to "
                 f"restore signature diversity.")
-    cand = idx.hint("shuffle_hash").join(
-        probe, [*block_cols, "l", "i", "seg"])
-    if _candidates_only:
-        # Diagnostic hook (scripts/exp_passjoin_growth.py): the raw
-        # candidate stream, pre-orientation and pre-verify, so tier
-        # scaling of Σ_g |idx_g|·|probe_g| can be measured directly.
-        return cand
     return (
-        cand
+        idx.hint("shuffle_hash").join(probe, [*block_cols, "l", "i", "seg"])
         # Orientation: strictly-shorter index rows pair unconditionally
         # (the probe never looks upward, so the pair meets only here);
         # equal-length pairs orient by id. Also excludes self-pairs.

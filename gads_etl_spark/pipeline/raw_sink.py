@@ -151,23 +151,14 @@ class RawZone:
         schema_version: str = "v1",
         api_version: str | None = None,
         query_signature: str | None = None,
-        count_mode: str = "reread",
     ) -> dict:
-        """``write_partitions`` for one partition; returns its manifest row.
-
-        ``count_mode='observe'`` counts with an ``Observation`` on the
-        write pass itself (pipeline/metrics.py) instead of re-reading:
-        same safety against nondeterminism (the count describes the exact
-        rows written), no second scan — the right mode when the payload
-        is TB-scale and the filesystem commit protocol is trusted.
-        """
+        """``write_partitions`` for one partition; returns its manifest row."""
         meta = {**key.as_dict(), "run_id": run_id, "schema_version": schema_version,
                 "api_version": api_version, "query_signature": query_signature}
         layout = df.withColumns({c: F.lit(str(v)) for c, v in meta.items() if c in LAYOUT})
-        return self.write_partitions(layout, [meta], count_mode=count_mode)[0]
+        return self.write_partitions(layout, [meta])[0]
 
-    def write_partitions(self, df: DataFrame, metas: list[dict],
-                         count_mode: str = "reread") -> list[dict]:
+    def write_partitions(self, df: DataFrame, metas: list[dict]) -> list[dict]:
         """Write the partitions ``metas`` names (layout values +
         ``schema_version``) in ONE ``partitionBy`` pass of ``df`` (payload
         + the five layout columns, every row in a named partition), then
@@ -181,10 +172,6 @@ class RawZone:
         (A9), and a partially-visible write is caught too. One writer per
         zone at a time: appends commit through the root's ``_temporary``.
         """
-        if count_mode not in ("reread", "observe"):
-            raise ValueError(f"count_mode must be 'reread' or 'observe', got {count_mode!r}")
-        if count_mode == "observe" and len(metas) != 1:
-            raise ValueError("count_mode='observe' counts a single partition")
         targets = [(PartitionKey.of(m), m["run_id"]) for m in metas]
         for key, run_id in targets:
             if self.is_sealed(key, run_id):
@@ -192,18 +179,10 @@ class RawZone:
                     f"partition {key} run_id={run_id} is sealed; raw partitions are immutable")
             if self._path_exists(self.partition_path(key, run_id)):
                 raise FileExistsError(f"partition {key} run_id={run_id} holds an unsealed attempt")
-        obs = None
         # Layout columns only: no payload to write, every target is empty.
         if any(c not in LAYOUT for c in df.columns):
-            if count_mode == "observe":
-                from gads_etl_spark.pipeline.metrics import observed
-
-                df, obs = observed(df, f"raw_write:{metas[0]['run_id']}")
             df.write.mode("append").partitionBy(*LAYOUT).format(self.data_format).save(self.root)
-        if count_mode == "observe":
-            counts = {targets[0]: int(obs.get["n_rows"])} if obs else {}
-        else:
-            counts = self.count_partitions(targets)
+        counts = self.count_partitions(targets)
         extracted_at = datetime.now(timezone.utc)
         sealed = [{"api_version": None, "query_signature": None, **m,
                    "extracted_at": extracted_at, "record_count": counts.get(t, 0)}

@@ -2709,7 +2709,7 @@ def ext_trigram_typicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc_id map-side after its broadcast join), so the cost is 2×
     one scan stage's CPU at ANY scale — strictly linear, and cheaper
     in wall than materialize-once everywhere past the cliff
-    (root-caused round 14: scripts/exp_trigram.py, SCALING.md). The
+    (root-caused round 14: DIAG_trigram_variants.json, SCALING.md). The
     frequent set is bounded (≤ |alphabet|³ grams) and broadcastable at
     any corpus size; then one equi-join back, one per-doc aggregate.
     """

@@ -97,6 +97,16 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def run_context(spark: SparkSession) -> dict:
+    """What a timing taken on ``spark`` depends on besides the code:
+    local cores, the master string and the shuffle partition count."""
+    return {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
+
+
 def get_session(app_name: str = "gads_etl_spark", cpus: int | None = None,
                 extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults."""

@@ -45,19 +45,6 @@ class TestRawZoneSeal:
         assert zone.read_partition(KEY, "run-a").count() == 5
         assert zone.manifest().count() == 1
 
-    def test_observe_count_mode_matches_reread(self, spark, zone):
-        # Single-pass Observation count seals the same record_count the
-        # validator's re-count will see.
-        meta = zone.write_partition(
-            _payload(spark), KEY, "run-obs", count_mode="observe"
-        )
-        assert meta["record_count"] == 5
-        assert zone.read_partition(KEY, "run-obs").count() == 5
-
-    def test_bad_count_mode_rejected(self, spark, zone):
-        with pytest.raises(ValueError):
-            zone.write_partition(_payload(spark), KEY, "run-x", count_mode="exact")
-
     def test_overwrite_refused(self, spark, zone):
         zone.write_partition(_payload(spark), KEY, "run-a")
         with pytest.raises(SealedPartitionError):

@@ -307,7 +307,7 @@ class TestRound3Plans:
         # Round-13 materialized the per-trigram relation (localCheckpoint,
         # "scan once"); that was the measured cause of the register's one
         # above-linear bench row — ~1.6B deserialized rows blow the
-        # storage fraction at the 100x tier (scripts/exp_trigram.py,
+        # storage fraction at the 100x tier (DIAG_trigram_variants.json,
         # round 14). Round-17's Arrow form keeps the lesson: the returned
         # plan is ONE fresh parquet scan into the per-doc Arrow pass (the
         # frequent-set pass already ran eagerly over its own scan) —
