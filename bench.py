@@ -3,15 +3,16 @@
 Prints the full detail object (headline + "extra" breadth set) on one
 JSON line, then the COMPACT headline metric on the FINAL line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-The compact line is last and short (~400 bytes) so any tail-capture of
-stdout always ends with one complete, parseable metric line no matter
-how large the breadth set grows (round 9's single giant line overran
-the driver's tail buffer and recorded parsed: null).
+The compact line is last and short (at most 512 bytes, tested) so any
+tail-capture of stdout always ends with one complete, parseable metric
+line no matter how large the breadth set grows (round 9's single giant
+line overran the driver's tail buffer and recorded parsed: null).
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import statistics
 import sys
@@ -628,25 +629,50 @@ def main() -> None:
     # Detail first, compact headline LAST: a bounded tail-capture of
     # stdout must always end with one complete parseable metric line.
     print(json.dumps({**out, "detail": True}))
+    print(compact_line(out, run_context(spark)))
+    spark.stop()
+
+
+#: The compact line's size bound, and how many ``vs_tiers`` outliers it
+#: names at most.
+COMPACT_BYTES = 512
+COMPACT_OUTLIERS = 5
+
+
+def compact_line(out: dict, context: dict) -> str:
+    """The compact headline line of a ``_measure`` result, at most
+    ``COMPACT_BYTES`` (512) bytes so a bounded tail-capture keeps it
+    whole (tests/test_bench_artifacts.py checks it with 40 outliers).
+
+    It carries the self-labeling ``vs_tiers`` summary against the
+    committed protocol-clean BENCH_tiers.json row: the median ratio,
+    how many queries are outliers (ratio >= 1.5 or <= 0.67) and the
+    worst ``COMPACT_OUTLIERS`` of them by |log ratio|, fewer when their
+    names would pass the bound. The full ratio map stays on the detail
+    line.
+    """
+    def dumps(d: dict) -> str:
+        return json.dumps(d, separators=(",", ":"))
+
     compact = {k: out[k] for k in
                ("metric", "value", "incomplete", "unit", "queries", "sf")}
     compact["extra_total"] = out["extra_total"]
     compact["errors_n"] = len(out["errors"])
-    compact["context"] = run_context(spark)
+    compact["context"] = context
     vt = out.get("vs_tiers")
     if vt:
-        # Compact carries the self-labeling summary (median ratio vs
-        # the committed protocol-clean tiers row + the outliers); the
-        # full per-query ratio map stays on the detail line so the
-        # compact line keeps its bounded tail-capture size.
-        compact["vs_tiers"] = {
-            "baseline_artifact": vt["baseline_artifact"],
-            "median_ratio": vt["median_ratio"],
-            "outliers": {n: r for n, r in vt["queries"].items()
-                         if r >= 1.5 or r <= 0.67},
-        }
-    print(json.dumps(compact))
-    spark.stop()
+        outliers = sorted(
+            ((n, r) for n, r in vt["queries"].items() if r >= 1.5 or r <= 0.67),
+            key=lambda nr: -abs(math.log(max(nr[1], 1e-3))))
+        named: dict[str, float] = {}
+        compact["vs_tiers"] = {"median_ratio": vt["median_ratio"],
+                               "n_outliers": len(outliers), "outliers": named}
+        for n, r in outliers[:COMPACT_OUTLIERS]:
+            named[n] = r
+            if len(dumps(compact).encode()) > COMPACT_BYTES:
+                del named[n]
+                break
+    return dumps(compact)
 
 
 def _measure(spark, names: list[str] | None = None) -> dict:

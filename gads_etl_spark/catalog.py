@@ -10,6 +10,7 @@ directory; at 100 TB it would be a metastore, but the access pattern
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,6 +26,14 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: Per session, the schema Spark inferred for each fixture file, keyed by
+#: (path, size, mtime_ns): inference runs a footer-reading Spark job
+#: (~85 ms per call), a read with the schema given runs none. A rewritten
+#: file changes its key and is inferred again.
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
+    weakref.WeakKeyDictionary()
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Resolve a fixture table to a schema-normalized DataFrame.
 
@@ -35,12 +44,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timezone is flipped to UTC for all subsequent queries, with a warning.
     Sessions built by ``gads_etl_spark.session.get_session`` are already
     UTC, so the warning only fires for foreign sessions.
+
+    Other tables reuse the schema this session inferred for the same
+    file version (``_SCHEMAS``), so only a file's first load runs Spark's
+    footer-reading job.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local file: no memo, Spark reports the error
+        return spark.read.parquet(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key in memo:
+        return spark.read.schema(memo[key]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[key] = df.schema
+    return df
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

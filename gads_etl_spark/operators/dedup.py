@@ -4,8 +4,8 @@ Design rules for 100 TB:
 - Never all-pairs. Candidate generation is always a *bucket equi-join*
   (LSH band buckets, blocking keys), so the shuffle is on content-derived
   keys and the pair count is bounded by bucket sizes, not n².
-- Everything JVM-side: ``xxhash64``, higher-order array functions, window
-  dedup. No Python in the hot path.
+- Per-gram and per-pair work runs on whole Arrow batches in one Python
+  pass per partition, never a per-row UDF; everything else is JVM-side.
 - Deterministic: hash seeds are fixed, survivors are chosen by min(id), so
   reruns (and the correctness oracle) agree bit-for-bit.
 """
@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gads_etl_spark.operators.util import spread
+from gads_etl_spark.operators.util import frequent_grams, spread
 
 
 def tokens(text: F.Column) -> F.Column:
@@ -156,8 +156,6 @@ def shingle_jaccard_pairs(
     paired under the old equi-join/comparison semantics and are
     filtered identically here.
     """
-    import math
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -832,11 +830,14 @@ def edit_distance_pairs_passjoin(
         # copies and the candidate stream grew 60x for 10x data
         # (155M -> 9.3B; per-row candidates fit c0 + k*copies —
         # DIAG_passjoin_growth.json) while output stayed linear.
-        # The estimate is one keyed count-join (~a third of the join's
-        # own cost) — the price of saturation arriving as a NAMED error
-        # with the re-blocking remedy instead of a silently
-        # quadratic-in-disguise join. candidate_budget=None waives it
-        # (deliberate saturation probes); an int overrides "auto".
+        # The estimate is one keyed count-join, measured at ~40% of the
+        # query's executor run time at sf0.1 (PROFILE_sf0.1.json
+        # ext_fuzzy_passjoin: its collectToPython execution against
+        # the join's save, 2.3 of 5.9 s) — the price of saturation
+        # arriving as a NAMED error with the re-blocking remedy
+        # instead of a silently quadratic-in-disguise join.
+        # candidate_budget=None waives it (deliberate saturation
+        # probes); an int overrides "auto".
         #
         # "auto" (the default) budgets 200 candidates per corpus row,
         # floored at 1M so toy fixtures never trip it: the linear
@@ -1103,102 +1104,117 @@ def duplicated_spans(
     itself.
 
     Suffix arrays are the single-node formulation; the distributed
-    equivalent is an inverted index over k-grams:
-    1. one map-side pass emits (doc, pos, gram) — Σ(n_tokens) rows, the
-       same linear blow-up a suffix array pays;
-    2. one shuffle groups by gram to find grams in >= min_docs docs
-       (map-side partial aggregation applies — gram counts combine);
-    3. the covered positions come back via an equi-join on the gram and
-       collapse to maximal spans with a gaps-and-islands window per doc
-       (one hashpartitioning(doc) Exchange).
-    Nothing is ever quadratic; the gram key is the raw token string so
-    the DuckDB oracle states the identical construction.
+    equivalent here is two Arrow passes, never quadratic, never a join:
+    1. ``util.frequent_grams`` (one action at call time) counts, per
+       k-gram, the documents containing it from per-batch partials and
+       broadcasts the grams in >= ``min_docs`` documents;
+    2. the returned per-document pass probes each k-gram position and
+       merges the hit windows ``[pos, pos + k - 1]`` by gaps and islands
+       (a new island starts when ``pos > prev_max + 1``).
+    The gram is the raw token string (Spark's ``split(text, '\\s+')``,
+    whose ``\\s`` is ASCII-only), as the DuckDB oracle states it, and
+    counts are exact. ``id_col`` is a key; a NULL id is probed but not
+    counted, as ``count(DISTINCT id)`` does.
 
     Returns (id, span_start, span_end, n_dup_grams) with 1-based
     INCLUSIVE token indices; adjacent/overlapping covered intervals merge.
     """
-    toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
-    n = F.size("_t")
-    positions = F.when(
-        n >= F.lit(k), F.sequence(F.lit(1), n - F.lit(k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    g = toks.select(
-        F.col(id_col),
-        F.explode(positions).alias("pos"),
-        F.col("_t"),
-    ).select(
-        id_col, "pos",
-        F.array_join(F.slice("_t", F.col("pos"), F.lit(k)), " ").alias("gram"),
-    )
-    dup = (
-        g.groupBy("gram")
-        .agg(F.countDistinct(id_col).alias("_nd"))
-        .where(F.col("_nd") >= min_docs)
-        .select("gram")
-    )
-    hits = g.join(dup, "gram").select(id_col, "pos",
-                                      (F.col("pos") + F.lit(k - 1)).alias("e"))
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_max = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    islands = hits.withColumn(
-        "_new", F.when(prev_max.isNull() | (F.col("pos") > prev_max + 1), 1)
-                 .otherwise(0)
-    ).withColumn("_island", F.sum("_new").over(
-        w.rowsBetween(Window.unboundedPreceding, 0)))
-    return (
-        islands.groupBy(id_col, "_island")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            F.max("e").cast("long").alias("span_end"),
-            F.count(F.lit(1)).cast("long").alias("n_dup_grams"),
-        )
-        .drop("_island")
-    )
+    return _dup_span_pass(df, id_col, text_col, k, min_docs, None)
 
 
 def strip_duplicated_spans(
     df: DataFrame,
-    spans: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
+    k: int = 8,
+    min_docs: int = 2,
     out_col: str = "clean_text",
 ) -> DataFrame:
-    """Remove the tokens covered by ``duplicated_spans`` output from each
-    document — the removal half of substring-level dedup (Lee et al.
-    2022): detected boilerplate is cut everywhere it appears (the
-    documented policy: spans are cross-doc boilerplate, so no occurrence
-    is canonical).
+    """Cut the tokens that ``duplicated_spans`` (same arguments) finds
+    covered from each document, in the same per-document pass — the
+    removal half of substring-level dedup (Lee et al. 2022). Boilerplate
+    is cut everywhere it appears: spans are cross-doc boilerplate, so no
+    occurrence is canonical.
 
-    Shape: spans collapse to one array per doc (tiny — spans, not
-    tokens), a single equi-join on the doc id brings them to the text,
-    and the cut is a per-row expression. Docs without spans pass through
-    untouched via the left join. The token filter is SQL-text nested
-    higher-order functions with explicit distinct variable names —
-    Python-lambda nesting mis-resolves shared auto-generated names (see
-    ``_centroid_d2s_sql`` in operators/similarity.py).
-
-    Returns the input plus ``out_col`` and ``n_removed_tokens``.
+    Returns the input's columns plus ``out_col`` (the kept tokens joined
+    by one space; NULL for NULL text) and ``n_removed_tokens``. A
+    document with a NULL id is never cut.
     """
-    sp = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("__sp")
-    )
-    kept = (
-        "filter(zip_with(split(`{t}`, '\\\\s+'), "
-        "sequence(1, size(split(`{t}`, '\\\\s+'))), "
-        "(tok_, i_) -> struct(tok_ AS tok, i_ AS i)), "
-        "p_ -> __sp IS NULL OR NOT exists(__sp, "
-        "s_ -> p_.i >= s_.span_start AND p_.i <= s_.span_end))"
-    ).format(t=text_col)
-    return (
-        df.join(sp, id_col, "left")
-        .withColumn("__kept", F.expr(kept))
-        .withColumn(out_col, F.array_join("__kept.tok", " "))
-        .withColumn(
-            "n_removed_tokens",
-            (F.size(tokens(F.col(text_col))) - F.size("__kept")).cast("long"),
-        )
-        .drop("__sp", "__kept")
-    )
+    return _dup_span_pass(df, id_col, text_col, k, min_docs, out_col)
+
+
+def _dup_span_pass(df: DataFrame, id_col: str, text_col: str, k: int,
+                   min_docs: int, out_col: str | None) -> DataFrame:
+    import re
+    from collections import Counter
+
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    ws = re.compile(r"\s+", re.ASCII)
+
+    def _grams(text: str) -> tuple[list, list]:
+        t = ws.split(text)
+        return t, [" ".join(t[i:i + k]) for i in range(len(t) - k + 1)]
+
+    def _partials(b):
+        c: Counter = Counter()
+        for i, text in zip(b.column(0).is_valid().to_pylist(),
+                           b.column(1).to_pylist()):
+            if i and text is not None:
+                c.update(set(_grams(text)[1]))
+        return list(c), list(c.values())
+
+    pairs = df.select(id_col, text_col)
+    bc = frequent_grams(pairs, _partials, min_docs)
+
+    def _islands(text: str, dup) -> tuple[list, list]:
+        toks, grams = _grams(text)
+        spans: list = []  # [start, end, n_dup_grams]
+        for p in (p for p, g in enumerate(grams, 1) if g in dup):
+            if spans and p <= spans[-1][1] + 1:
+                spans[-1][1:] = [p + k - 1, spans[-1][2] + 1]
+            else:
+                spans.append([p, p + k - 1, 1])
+        return toks, spans
+
+    def _cut(text: str, dup) -> tuple:
+        toks, spans = _islands(text, dup)
+        kept = toks
+        for s, e, _ in reversed(spans):
+            kept = kept[:s - 1] + kept[e:]
+        return " ".join(kept), len(toks) - len(kept)
+
+    def _spans(batches):
+        for b in batches:
+            idx, cols = [], ([], [], [])
+            for r, text in enumerate(b.column(1).to_pylist()):
+                for span in _islands(text, bc.value)[1] if text is not None else ():
+                    idx.append(r)
+                    for c, v in zip(cols, span):
+                        c.append(v)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(pa.array(idx, pa.int64()))]
+                + [pa.array(c, pa.int64()) for c in cols],
+                names=[id_col, "span_start", "span_end", "n_dup_grams"])
+
+    def _strip(batches):
+        for b in batches:
+            out = [(None, None) if text is None else _cut(text, bc.value if i else ())
+                   for i, text in zip(b.column(id_col).is_valid().to_pylist(),
+                                      b.column(text_col).to_pylist())]
+            yield pa.RecordBatch.from_arrays(
+                b.columns + [pa.array([c for c, _ in out], pa.string()),
+                             pa.array([n for _, n in out], pa.int64())],
+                names=b.schema.names + [out_col, "n_removed_tokens"])
+
+    if out_col is None:
+        return pairs.mapInArrow(_spans, StructType([df.schema[id_col]] + [
+            StructField(c, LongType())
+            for c in ("span_start", "span_end", "n_dup_grams")]))
+    return df.mapInArrow(_strip, StructType(
+        df.schema.fields + [StructField(out_col, StringType()),
+                            StructField("n_removed_tokens", LongType())]))
 
 
 def simhash_radius_pairs(docs: DataFrame, radius: int = 3,

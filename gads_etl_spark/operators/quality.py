@@ -163,21 +163,19 @@ def trigram_typicality(df: DataFrame, id_col: str = "doc_id",
     documents corpus-wide — the cheap fluency/quality signal (a doc of
     rare trigrams is mojibake, code, or another language).
 
-    Two corpus passes, both Arrow-vectorized (round 17, guide §4.2 —
-    the previous expression form exploded one row per trigram and paid
-    interpreted `substring` + `array_distinct` per doc, 82s at the 100x
-    tier):
+    Two corpus passes, both Arrow-vectorized (the expression form they
+    replaced took 82 s at the 100x tier):
 
     1. **Doc-frequency pass** (runs EAGERLY at call time — the
        frequent-set aggregation is a bounded action, the same
        construction-time eagerness as the ANN ladder's centroid fit):
        per Arrow batch, each doc's distinct trigrams are computed as
        vectorized uint32 codes (ASCII lane) and counted with one
-       ``np.unique`` per batch; Spark sums the per-batch partials per
-       gram and the ``>= min_df`` survivors — a BOUNDED set
-       (≤ |alphabet|³, independent of corpus size) — collect and
-       broadcast.
-    2. **Per-doc pass**: the returned (lazy) plan — one ``mapInPandas``
+       ``np.unique`` per batch; ``util.frequent_grams`` has Spark sum
+       the per-batch partials per gram and broadcasts the
+       ``>= min_df`` survivors — a BOUNDED set (≤ |alphabet|³,
+       independent of corpus size).
+    2. **Per-doc pass**: the returned (lazy) plan — one ``mapInArrow``
        emitting ``(id, n_trigrams, n_typical)`` via a sorted-array
        membership probe against the broadcast frequent set.
 
@@ -194,27 +192,19 @@ def trigram_typicality(df: DataFrame, id_col: str = "doc_id",
     (n_trigrams 1, n_typical 0); non-ASCII docs slice by CHARACTER in a
     Python lane.
     """
+    from collections import Counter
+
     import numpy as np
-    import pandas as pd
-    from numpy.lib.stride_tricks import sliding_window_view  # noqa: F401
+    import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from gads_etl_spark.operators.util import spread
+    from gads_etl_spark.operators.util import frequent_grams, spread
 
-    spark = df.sparkSession
-    id_t = df.schema[id_col].dataType
     t = spread(df.select(
         F.col(id_col),
         F.lower(F.col(text_col)).alias("_lt"),
         F.length(F.col(text_col)).alias("_lo"),
     ))
-
-    def _ascii_codes(lt: str) -> "np.ndarray":
-        # all windows full 3 chars: len(lt) == lo in this lane
-        b = np.frombuffer(lt.encode("ascii"), dtype=np.uint8)
-        c = (b[:-2].astype(np.uint32) << 16) | (b[1:-1].astype(np.uint32) << 8) \
-            | b[2:].astype(np.uint32)
-        return np.unique(c)
 
     def _doc_grams(lt, lo):
         """(codes, strings): per-doc distinct trigrams — uint32 codes
@@ -222,89 +212,61 @@ def trigram_typicality(df: DataFrame, id_col: str = "doc_id",
         bound = max(int(lo) - 2, 0)
         if bound == 0:
             return None, {lt[0:3]}
-        if lt.isascii() and len(lt) == lo:
-            return _ascii_codes(lt), None
+        if lt.isascii() and len(lt) == lo:  # every window is 3 full chars
+            b = np.frombuffer(lt.encode("ascii"), dtype=np.uint8).astype(np.uint32)
+            return np.unique((b[:-2] << 16) | (b[1:-1] << 8) | b[2:]), None
         return None, {lt[i:i + 3] for i in range(bound)}
 
-    def _code_str(c: int) -> str:
-        return chr((c >> 16) & 0xFF) + chr((c >> 8) & 0xFF) + chr(c & 0xFF)
+    def _partials(b):
+        code_runs: list = []
+        slow: Counter = Counter()
+        for lt, lo in zip(b.column("_lt").to_pylist(),
+                          b.column("_lo").to_pylist()):
+            if lt is None:
+                continue  # NULL grams never join
+            codes, strs = _doc_grams(lt, lo)
+            if codes is not None:
+                code_runs.append(codes)
+            else:
+                slow.update(strs)
+        gs, ns = list(slow), list(slow.values())
+        if code_runs:
+            uq, cnt = np.unique(np.concatenate(code_runs), return_counts=True)
+            gs.extend(chr(c >> 16) + chr((c >> 8) & 0xFF) + chr(c & 0xFF)
+                      for c in uq.tolist())
+            ns.extend(cnt.tolist())
+        return gs, ns
 
-    def _df_partials(batches):
-        for pdf in batches:
-            lts = pdf["_lt"].tolist()
-            los = pdf["_lo"].tolist()
-            code_runs: list = []
-            from collections import Counter
-            slow: Counter = Counter()
-            for lt, lo in zip(lts, los):
-                if lt is None:
-                    continue  # NULL grams never join
-                codes, strs = _doc_grams(lt, lo)
-                if codes is not None:
-                    code_runs.append(codes)
-                else:
-                    slow.update(strs)
-            gs: list = []
-            ns: list = []
-            if code_runs:
-                uq, cnt = np.unique(np.concatenate(code_runs),
-                                    return_counts=True)
-                gs.extend(_code_str(int(c)) for c in uq)
-                ns.extend(int(x) for x in cnt)
-            gs.extend(slow.keys())
-            ns.extend(slow.values())
-            yield pd.DataFrame({"g": pd.Series(gs, dtype=object),
-                                "n": pd.Series(ns, dtype=object)})
+    def _pack(fset):
+        return np.sort(np.fromiter(
+            ((ord(g[0]) << 16) | (ord(g[1]) << 8) | ord(g[2])
+             for g in fset if len(g) == 3 and g.isascii()),
+            dtype=np.uint32)), fset
 
-    freq_rows = (
-        t.mapInPandas(_df_partials, "g string, n long")
-        .groupBy("g").agg(F.sum("n").alias("n"))
-        .where(F.col("n") >= int(min_df))
-        .select("g").collect()
-    )
-    fset = frozenset(r[0] for r in freq_rows)
-    fcodes = np.sort(np.fromiter(
-        ((ord(g[0]) << 16) | (ord(g[1]) << 8) | ord(g[2])
-         for g in fset if len(g) == 3 and g.isascii()),
-        dtype=np.uint32))
-    bc = spark.sparkContext.broadcast((fcodes, fset))
+    bc = frequent_grams(t, _partials, min_df, _pack)
 
-    out_schema = StructType([
-        StructField(id_col, id_t, True),
-        StructField("n_trigrams", LongType(), True),
-        StructField("n_typical", LongType(), True),
-    ])
+    def _count(lt, lo, fc, fs) -> tuple[int, int]:
+        if lt is None:
+            return 1, 0  # the single NULL gram row
+        codes, strs = _doc_grams(lt, lo)
+        if codes is None:
+            return len(strs), len(strs & fs)
+        idx = np.searchsorted(fc, codes)
+        idx[idx == fc.size] = 0
+        return int(codes.size), int((fc[idx] == codes).sum()) if fc.size else 0
 
     def _doc_counts(batches):
         fc, fs = bc.value
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            lts = pdf["_lt"].tolist()
-            los = pdf["_lo"].tolist()
-            n_tri: list = []
-            n_typ: list = []
-            for lt, lo in zip(lts, los):
-                if lt is None:
-                    n_tri.append(1)  # the single NULL gram row
-                    n_typ.append(0)
-                    continue
-                codes, strs = _doc_grams(lt, lo)
-                if codes is not None:
-                    n_tri.append(int(codes.size))
-                    idx = np.searchsorted(fc, codes)
-                    idx[idx == fc.size] = 0
-                    n_typ.append(int((fc[idx] == codes).sum())
-                                 if fc.size else 0)
-                else:
-                    n_tri.append(len(strs))
-                    n_typ.append(len(strs & fs))
-            yield pd.DataFrame({
-                id_col: ids,
-                "n_trigrams": pd.Series(n_tri, dtype=object),
-                "n_typical": pd.Series(n_typ, dtype=object),
-            })
+        for b in batches:
+            out = [_count(lt, lo, fc, fs) for lt, lo in
+                   zip(b.column("_lt").to_pylist(), b.column("_lo").to_pylist())]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.array([n for n, _ in out], pa.int64()),
+                 pa.array([n for _, n in out], pa.int64())],
+                names=[id_col, "n_trigrams", "n_typical"])
 
-    return t.mapInPandas(_doc_counts, out_schema)
+    return t.mapInArrow(_doc_counts, StructType([t.schema[id_col]] + [
+        StructField(c, LongType()) for c in ("n_trigrams", "n_typical")]))
 
 
 def mix_to_budget(

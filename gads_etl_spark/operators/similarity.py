@@ -497,14 +497,6 @@ def quantize_int8(
     return df.withColumn(q_col, q).withColumn(scale_col, scale)
 
 
-def _sqdist(a: F.Column, b: F.Column) -> F.Column:
-    """Sequential-fold squared L2 distance (deterministic IEEE order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-
-
 def pq_train_codebooks(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -583,7 +575,7 @@ def _centroid_d2s_sql(vec_sql: str, offset0: int, d: int,
 
     Why SQL text and not Column-API expressions — both alternatives were
     measured and rejected:
-    - Column-API ``transform(codebook_literal, c -> _sqdist(...))``:
+    - Column-API ``transform(codebook_literal, c -> aggregate(...))``:
       nesting aggregate(zip_with(..)) inside another higher-order
       function's PYTHON lambda makes Spark mis-resolve the shared
       auto-generated lambda-variable names (wrong bindings / NULLs past

@@ -33,3 +33,33 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def frequent_grams(df: DataFrame, batch_partials, min_docs: int,
+                   pack=lambda grams: grams):
+    """Broadcast the grams that occur in at least ``min_docs`` documents:
+    the shared first pass of the Arrow gram operators (one Spark action).
+
+    ``batch_partials(batch)`` maps one Arrow record batch of ``df`` to
+    ``(grams, counts)``, each gram's count of documents in the batch (a
+    document counts once per distinct gram). Spark sums the partials per
+    gram; the grams reaching ``min_docs`` return as Arrow and go to the
+    executors as one broadcast of ``pack(frozenset_of_grams)``. Grams
+    are the caller's strings, so membership is exact.
+    """
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    def _emit(batches):
+        for b in batches:
+            g, n = batch_partials(b)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(g, pa.string()), pa.array(n, pa.int64())], ["g", "n"])
+
+    freq = (
+        df.mapInArrow(_emit, "g string, n long")
+        .groupBy("g").agg(F.sum("n").alias("n"))
+        .where(F.col("n") >= int(min_docs)).select("g").toArrow()
+    )
+    grams = frozenset(freq.column(0).to_pylist())
+    return df.sparkSession.sparkContext.broadcast(pack(grams))

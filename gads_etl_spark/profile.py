@@ -67,7 +67,10 @@ def fold(log_dir: str) -> dict[str, dict]:
                         stage_owner.setdefault(sid, owner)
                 elif kind.endswith("SparkListenerSQLExecutionStart"):
                     head = (ev.get("details") or "").split("\n", 1)[0]
-                    actions[ev["executionId"]] = head.split("(", 1)[0].rsplit(".", 1)[-1]
+                    name = head.split("(", 1)[0].rsplit(".", 1)[-1]
+                    # a Scala closure: $anonfun$collectAsArrowToPython$1$adapted
+                    actions[ev["executionId"]] = (name.split("$")[2]
+                                                  if name.startswith("$anonfun$") else name)
                 elif kind == "SparkListenerTaskEnd":
                     sid = ev["Stage ID"]
                     by_id = stages.setdefault(stage_owner.get(sid, ("", None)), {})

@@ -2075,9 +2075,11 @@ def ext_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-level duplicate spans: per document, the maximal token
     spans covered by 8-grams that appear in >= 2 distinct documents —
-    the boilerplate detector that doc-level dedup can't express. Inverted
-    k-gram index + gaps-and-islands merge; the gram key is the raw token
-    string, so both engines state the identical construction."""
+    the boilerplate detector that doc-level dedup can't express. A
+    broadcast set of duplicated 8-grams (built at call time from
+    per-batch partials) + a per-document gaps-and-islands merge; the
+    gram key is the raw token string, so both engines state the
+    identical construction."""
     from gads_etl_spark.operators.dedup import duplicated_spans
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2136,13 +2138,13 @@ def ext_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detect cross-document duplicated 8-gram spans, then CUT them from
     every document — detect + remove, the full substring-dedup pass. The
-    span detection shuffles grams once; the removal is one doc-keyed
-    equi-join and a per-row expression cut."""
-    from gads_etl_spark.operators.dedup import duplicated_spans, strip_duplicated_spans
+    duplicated 8-gram set is built once (one gram shuffle, at call time);
+    detection and the cut share one per-document Arrow pass, with no
+    join back."""
+    from gads_etl_spark.operators.dedup import strip_duplicated_spans
 
-    docs = load_table(spark, sf_dir, "documents")
-    spans = duplicated_spans(docs, k=8, min_docs=2)
-    return strip_duplicated_spans(docs, spans).select(
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return strip_duplicated_spans(docs, k=8, min_docs=2).select(
         "doc_id", "clean_text", "n_removed_tokens"
     )
 

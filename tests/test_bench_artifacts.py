@@ -78,3 +78,38 @@ def test_tiers_and_sf10_artifacts_agree_per_query():
         "BENCH_tiers.json and BENCH_sf10.json disagree (one was "
         "refreshed without the other — rerun bench.py --refresh-sf10 "
         "or --tiers --with-sf10): " + "; ".join(mismatches))
+
+
+@pytest.mark.parametrize("names", ["bench", "longest"])
+def test_compact_line_stays_bounded_with_many_outliers(names):
+    """bench.py's compact line must stay whole in a bounded tail-capture
+    however many breadth queries a slow host marks as outliers (the r17
+    line reached 856 bytes with 17): it names the worst of them by |log
+    ratio|, at most five and only as many as fit, and counts them all."""
+    import math
+    import sys
+
+    sys.path.insert(0, str(REPO))
+    import bench
+    from gads_etl_spark.queries import REGISTRY
+
+    pool = (bench.EXTRA if names == "bench"
+            else sorted(REGISTRY, key=len, reverse=True))[:40]
+    ratios = {n: round(0.6 - 0.01 * i, 2) if i % 2 else round(1.5 + 0.1 * i, 2)
+              for i, n in enumerate(pool)}
+    out = {
+        "metric": "headline_queries_total_wall", "value": 123.4567,
+        "incomplete": False, "unit": "sec",
+        "queries": {n: 12.3456 for n in bench.HEADLINE}, "sf": 0.1,
+        "extra_total": 1234.5678, "errors": {},
+        "vs_tiers": {"baseline_artifact": "BENCH_tiers.json",
+                     "median_ratio": 1.23, "queries": ratios},
+    }
+    context = {"cpus": 128, "master": "local[128]", "shuffle_partitions": 512}
+    line = bench.compact_line(out, context)
+    assert len(line.encode()) <= bench.COMPACT_BYTES == 512
+    vt = json.loads(line)["vs_tiers"]
+    assert vt["n_outliers"] == 40
+    worst = sorted(ratios, key=lambda n: -abs(math.log(ratios[n])))
+    assert list(vt["outliers"]) == worst[:len(vt["outliers"])]
+    assert len(vt["outliers"]) >= 3

@@ -961,9 +961,8 @@ class TestStripDuplicatedSpans:
             (2, "other words a b c d e trailing"),
             (3, "totally unrelated content here now"),
         ], "doc_id long, text string")
-        spans = D.duplicated_spans(docs, k=3)
         out = {r.doc_id: (r.clean_text, r.n_removed_tokens)
-               for r in D.strip_duplicated_spans(docs, spans).collect()}
+               for r in D.strip_duplicated_spans(docs, k=3).collect()}
         assert out == {
             1: ("unique1 one", 5),
             2: ("other words trailing", 5),
@@ -974,10 +973,139 @@ class TestStripDuplicatedSpans:
         docs = spark.createDataFrame([
             (1, "a b c"), (2, "a b c"),
         ], "doc_id long, text string")
-        spans = D.duplicated_spans(docs, k=3)
         out = {r.doc_id: (r.clean_text, r.n_removed_tokens)
-               for r in D.strip_duplicated_spans(docs, spans).collect()}
+               for r in D.strip_duplicated_spans(docs, k=3).collect()}
         assert out == {1: ("", 3), 2: ("", 3)}
+
+
+class TestDupSpansDifferential:
+    """The Arrow rebuild of duplicated_spans / strip_duplicated_spans
+    (broadcast duplicated-gram set, one per-document pass) must be
+    value-identical to the shuffle/window/join forms it replaced, across
+    the edges of their semantics: Java's ASCII-only ``\\s+`` split (empty
+    leading/trailing tokens, tab, newline, vertical tab, while NBSP and
+    other non-ASCII spaces are NOT separators), docs shorter than k, NULL
+    text, NULL id (probed, not counted), a gram repeated inside ONE
+    document only, merging of adjacent/overlapping windows, non-ASCII
+    tokens, and several ``min_docs``."""
+
+    @staticmethod
+    def _spans_form(df, k, min_docs, id_col="doc_id", text_col="text"):
+        # the exact previous duplicated_spans body, kept as the reference
+        from pyspark.sql.window import Window
+
+        toks = df.select(F.col(id_col), D.tokens(F.col(text_col)).alias("_t"))
+        n = F.size("_t")
+        positions = F.when(
+            n >= F.lit(k), F.sequence(F.lit(1), n - F.lit(k - 1))
+        ).otherwise(F.array().cast("array<int>"))
+        g = toks.select(
+            F.col(id_col),
+            F.explode(positions).alias("pos"),
+            F.col("_t"),
+        ).select(
+            id_col, "pos",
+            F.array_join(F.slice("_t", F.col("pos"), F.lit(k)), " ").alias("gram"),
+        )
+        dup = (
+            g.groupBy("gram")
+            .agg(F.countDistinct(id_col).alias("_nd"))
+            .where(F.col("_nd") >= min_docs)
+            .select("gram")
+        )
+        hits = g.join(dup, "gram").select(id_col, "pos",
+                                          (F.col("pos") + F.lit(k - 1)).alias("e"))
+        w = Window.partitionBy(id_col).orderBy("pos")
+        prev_max = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
+        islands = hits.withColumn(
+            "_new", F.when(prev_max.isNull() | (F.col("pos") > prev_max + 1), 1)
+                     .otherwise(0)
+        ).withColumn("_island", F.sum("_new").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)))
+        return (
+            islands.groupBy(id_col, "_island")
+            .agg(
+                F.min("pos").cast("long").alias("span_start"),
+                F.max("e").cast("long").alias("span_end"),
+                F.count(F.lit(1)).cast("long").alias("n_dup_grams"),
+            )
+            .drop("_island")
+        )
+
+    @staticmethod
+    def _strip_form(df, spans, id_col="doc_id", text_col="text",
+                    out_col="clean_text"):
+        # the exact previous strip_duplicated_spans body
+        sp = spans.groupBy(id_col).agg(
+            F.collect_list(F.struct("span_start", "span_end")).alias("__sp")
+        )
+        kept = (
+            "filter(zip_with(split(`{t}`, '\\\\s+'), "
+            "sequence(1, size(split(`{t}`, '\\\\s+'))), "
+            "(tok_, i_) -> struct(tok_ AS tok, i_ AS i)), "
+            "p_ -> __sp IS NULL OR NOT exists(__sp, "
+            "s_ -> p_.i >= s_.span_start AND p_.i <= s_.span_end))"
+        ).format(t=text_col)
+        return (
+            df.join(sp, id_col, "left")
+            .withColumn("__kept", F.expr(kept))
+            .withColumn(out_col, F.array_join("__kept.tok", " "))
+            .withColumn(
+                "n_removed_tokens",
+                (F.size(D.tokens(F.col(text_col))) - F.size("__kept")).cast("long"),
+            )
+            .drop("__sp", "__kept")
+        )
+
+    @staticmethod
+    def _docs(spark):
+        import random
+
+        rng = random.Random(8)
+        vocab = ["a", "b", "c", "d", "e", "f", "g"]
+        rows = [(i, " ".join(rng.choice(vocab)
+                             for _ in range(rng.randint(0, 14))))
+                for i in range(40)]
+        edge = [
+            (100, None),                     # NULL text
+            (101, ""), (102, "a b"),         # shorter than k
+            (103, " a b c d"),               # leading space: empty token
+            (104, "a b c d "),               # trailing space: empty token
+            (105, "a  b\tc\nd\x0be\x0c\rf"),  # ASCII whitespace runs
+            (106, "a\u00a0b c d"),           # NBSP is not Java \s
+            (107, "a\u2003b\x1cc\x85d e"),   # nor are these
+            (108, "x y z x y z x y z"),      # repeated in ONE doc only
+            (109, "p q r s t u"),            # p q r + s t u adjacent ...
+            (110, "p q r zz1"), (111, "zz2 s t u"),
+            (112, "m n o m"), (113, "n o m n"),  # overlapping windows
+            (114, "héllo wörld ünï cöde héllo"),
+            (115, "日本 語 テ キ スト"), (116, "語 テ キ 日本"),
+            (None, "a b c d e f g"),         # NULL id: probed, not counted
+            (117, "h i j"), (118, "h i j k"),
+        ]
+        return spark.createDataFrame(rows + edge, "doc_id long, text string")
+
+    @staticmethod
+    def _rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    @pytest.mark.parametrize("min_docs", [1, 2, 3])
+    def test_spans_match_previous_form(self, spark, min_docs):
+        docs = self._docs(spark)
+        got = self._rows(D.duplicated_spans(docs, k=3, min_docs=min_docs))
+        want = self._rows(self._spans_form(docs, 3, min_docs))
+        assert got == want and want
+
+    @pytest.mark.parametrize("min_docs", [1, 2, 3])
+    def test_strip_matches_previous_form(self, spark, min_docs):
+        docs = self._docs(spark)
+        got = self._rows(D.strip_duplicated_spans(docs, k=3, min_docs=min_docs)
+                         .select("doc_id", "text", "clean_text",
+                                 "n_removed_tokens"))
+        want = self._rows(self._strip_form(
+            docs, self._spans_form(docs, 3, min_docs))
+            .select("doc_id", "text", "clean_text", "n_removed_tokens"))
+        assert got == want
 
 
 class TestSimhashRadiusPairs:

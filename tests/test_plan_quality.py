@@ -268,7 +268,7 @@ class TestRound3Plans:
         plan = _formatted_plan(spark, "ext_trigram_typicality")
         assert "lower(text" in plan, plan
         assert "length(text" in plan, plan
-        assert "MapInPandas" in plan, plan
+        assert "MapInArrow" in plan, plan
 
     def test_winnow_map_stage_is_spread(self, spark):
         # Round-16: the winnow operator is pure per-row md5 expression

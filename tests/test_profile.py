@@ -85,6 +85,15 @@ def test_fold_groups_aqe_stages_by_execution(tmp_path):
     assert out["w:q"]["executions"][0]["action"] == "collectToPython"
 
 
+def test_fold_names_closure_actions_by_their_method(tmp_path):
+    _write_log(tmp_path / "local-1", [
+        _sql_start(1, "$anonfun$collectAsArrowToPython$1$adapted"),
+        _job(0, [0], "q", 1),
+        _task(0, 5),
+    ])
+    assert fold(str(tmp_path))["q"]["executions"][0]["action"] == "collectAsArrowToPython"
+
+
 def test_entry_point_writes_profile(tmp_path):
     env = {**os.environ, "PYTHONPATH": str(REPO), "SPARK_GRAFT_CPUS": "2",
            "SPARK_GRAFT_DRIVER_MEM": "1g"}
